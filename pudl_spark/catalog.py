@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from pudl_spark.sql import ident
+
 # The driver's synthetic test tables (TESTDATA.md).
 TEST_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -132,7 +134,7 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
                                  ntz_cols)
     # One batched withColumns (a single py4j round trip) instead of a
     # withColumn per repaired column.
-    updates = {c: F.timestamp_micros(F.expr(f"`{c}` div 1000"))
+    updates = {c: F.timestamp_micros(F.expr(f"{ident(c)} div 1000"))
                for c in repair_ns}
     updates.update({c: F.col(c).cast("timestamp") for c in ntz_cols})
     if updates:
@@ -184,37 +186,6 @@ def load_tables(spark: SparkSession, sf_dir: str,
     cat = Catalog(root=sf_dir)
     return {n: cat.read(spark, n) for n in names
             if os.path.exists(cat.path(n))}
-
-
-def in_values_expr(col_name: str, values) -> Column:
-    """``col IN (v1, v2, ...)`` as ONE parsed SQL expression.
-
-    ``Column.isin(vals)`` converts every literal through its own py4j
-    round trips (~4 per value, measured r16) — at the store families'
-    2048-value In() prune gate that is thousands of driver round
-    trips (~1-2 s of wall) per probe, all spent building a literal
-    list the JVM parser assembles in microseconds. The parsed text
-    resolves to the same Catalyst ``In`` node (integer literals widen
-    to the column type under the same implicit casts either way), so
-    the plan and results are unchanged. Integral values only — the
-    prune call sites pass xxhash64 buckets and ids.
-    """
-    from pyspark.sql import functions as F
-
-    vals = list(values)
-    bad = [v for v in vals
-           if not isinstance(v, int) or isinstance(v, bool)]
-    if bad:
-        raise TypeError(f"in_values_expr: non-integral values {bad[:3]}")
-    if not vals:
-        return F.col(col_name).isin()
-    lits = ",".join(
-        # Long.MIN_VALUE has no negative-literal spelling (the parser
-        # reads "-x" as unary minus over a too-big DECIMAL); spell it
-        # as an expression that folds to the same BIGINT.
-        "(-9223372036854775807 - 1)" if v == -(1 << 63) else str(v)
-        for v in vals)
-    return F.expr(f"`{col_name}` IN ({lits})")
 
 
 def _estimated_scan_partitions(df: DataFrame) -> int | None:

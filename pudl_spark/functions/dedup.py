@@ -12,6 +12,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from pudl_spark.functions.text import char_ngrams, word_shingles
+from pudl_spark.sql import in_list
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
@@ -66,7 +67,7 @@ def _minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
              rng.randrange(0, _MINHASH_PRIME)) for _ in range(num_hashes)]
 
 
-def minhash_signature(col: Column | str, num_hashes: int = 64,
+def minhash_signature(col: str, num_hashes: int = 64,
                       shingle_k: int = 3, use_words: bool = True) -> Column:
     """MinHash signature via one xxhash64 per shingle + a universal
     hash family (a*h + b) mod p per permutation — one string hash and
@@ -789,9 +790,7 @@ def append_to_lsh_store_idempotent(
             store_ids = spark.table(
                 f"{table_prefix}{suffix}").select("id")
             if small:
-                from pudl_spark.catalog import in_values_expr
-                store_ids = store_ids.filter(
-                    in_values_expr("id", sorted(ids)))
+                store_ids = store_ids.filter(in_list("id", sorted(ids)))
             rows = rows.join(store_ids.distinct(), "id", "left_anti")
         write_bucketed_table(rows, f"{table_prefix}{suffix}",
                              buckets, num_buckets, sort_cols=sorts,
@@ -901,12 +900,12 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
     here so the regime gate never triggers an extra action over the
     batch's lineage (a DERIVED batch — the output of a cleaning
     pipeline — would otherwise re-run that pipeline just to be
-    counted, ADVICE r8). In the small regime the batch's
-    shingle-hash SETS (not the raw batch) are what materializes —
-    one text pass feeds banding and verify both, the single-shingle
-    shape the build and append already use. The large regime keeps
-    everything lazy and pipelined in the one returned action
-    (measured faster than a sets checkpoint there — r16).
+    counted, ADVICE r8). In the small regime the RAW batch is
+    checkpointed once, so its upstream pipeline evaluates exactly
+    once; the shingle-hash sets and the band keys are both derived
+    from that checkpoint (a sets checkpoint measured slower at this
+    batch size). The large regime keeps everything lazy and
+    pipelined in the one returned action.
 
     ``min_store_bytes`` (r9, measured): pruning exists to SKIP INDEX
     BYTES, so it must not engage unless there are enough bytes to
@@ -1006,8 +1005,7 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
                          spark, f"{table_prefix}_sets")
                      >= min_store_bytes)):
             pruned = True
-            from pudl_spark.catalog import in_values_expr
-            store_bands = store_bands.filter(in_values_expr(
+            store_bands = store_bands.filter(in_list(
                 "bucket", sorted({r["bucket"] for r in nbrows})))
     cand = (
         nb.alias("a").join(
@@ -1032,8 +1030,7 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
         if len(crows) <= max_prune_values:
             cand = spark.createDataFrame(
                 spark.sparkContext.parallelize(crows, 1), cand.schema)
-            from pudl_spark.catalog import in_values_expr
-            store_sets = store_sets.filter(in_values_expr(
+            store_sets = store_sets.filter(in_list(
                 "id", sorted({r["corpus_id"] for r in crows})))
     return verified_jaccard_pairs(cand, new_sets, store_sets,
                                   "new_id", "corpus_id",
@@ -1042,7 +1039,7 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
 
 # -------------------------------------------------------------- simhash
 
-def simhash_expr(col: Column | str, bits: int = 64) -> Column:
+def simhash_expr(col: str, bits: int = 64) -> Column:
     """SimHash over whitespace tokens: per bit position, sum +-1 votes
     of each token-hash's bit; pack the majority signs into a bigint.
 
@@ -1088,7 +1085,7 @@ def simhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
     df = _spread(df, id_col)
     sh = df.select(
         F.col(id_col).alias("id"),
-        simhash_expr(F.col(text_col)).alias("simhash"),
+        simhash_expr(text_col).alias("simhash"),
     )
     blocks = F.array(*[
         F.struct(

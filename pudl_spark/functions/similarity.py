@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from pudl_spark.sql import in_list
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns (double math)."""
@@ -487,8 +489,7 @@ def ivf_store_topk(spark, table_name: str, queries: DataFrame,
             qseeds = spark.createDataFrame(
                 spark.sparkContext.parallelize(qrows, 1), qseeds.schema)
             cells = sorted({r["cell"] for r in qrows})
-            from pudl_spark.catalog import in_values_expr
-            s = s.filter(in_values_expr("cell", cells))
+            s = s.filter(in_list("cell", cells))
         else:
             # Caller understated batch_rows: stay distributed (the
             # bulk full-join regime); cut lineage as before so the
@@ -1002,8 +1003,6 @@ def antijoin_store_ids(spark, table_name: str, rows: DataFrame,
              .limit(max_prune_values + 1).collect()]
     store_ids = spark.table(table_name)
     if len(cells) <= max_prune_values:
-        from pudl_spark.catalog import in_values_expr
-        store_ids = store_ids.filter(
-            in_values_expr("cell", sorted(cells)))
+        store_ids = store_ids.filter(in_list("cell", sorted(cells)))
     return rows.join(store_ids.select("vec_id").distinct(),
                      "vec_id", "left_anti")

@@ -10,35 +10,13 @@ and stays inside whole-stage codegen.
 
 from __future__ import annotations
 
-import re as _re
-
 from pyspark.sql import Column, functions as F
 
-# SQL-text fast path (r16, guide §1.2): the expression builders below
-# are assembled per query CONSTRUCTION, and the Column-operator form
-# pays one py4j round trip per call — hundreds to thousands per query
-# (~0.1-0.5 s of driver wall, measured). When the input column is a
-# plain string name, each builder instead renders the IDENTICAL
-# expression as SQL text and parses it JVM-side in one round trip.
-# The trees match token for token (same functions, literals and
-# association order; lambda variable names differ cosmetically), so
-# plans and results are unchanged — oracle-pinned for every consumer
-# query. Column inputs keep the original operator path.
-_PLAIN_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+from pudl_spark.sql import ident, lit
 
-
-def _ident_sql(col: Column | str) -> str | None:
-    """Backticked SQL identifier for a plain string column name;
-    None for Column inputs or non-plain names (dotted/exotic), which
-    keep the Column-operator path."""
-    if isinstance(col, str) and _PLAIN_IDENT.match(col):
-        return f"`{col}`"
-    return None
-
-
-def _sq(s: str) -> str:
-    """Single-quoted SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+# The builders render parsed SQL text: one JVM-side parse per
+# expression instead of one py4j round trip per Column operator
+# (hundreds to thousands per query).
 
 
 def _tokens_sql(c: str) -> str:
@@ -49,6 +27,7 @@ def _tokens_sql(c: str) -> str:
 
 def _word_shingles_sql(c: str, k: int, distinct: bool) -> str:
     t = _tokens_sql(c)
+    # NB sequence(1, 0) steps DOWN in Spark -> guard short documents.
     idx = (f"CASE WHEN size({t}) >= {k} THEN "
            f"sequence(1, size({t}) - {k - 1}) "
            f"ELSE CAST(array() AS array<int>) END")
@@ -72,80 +51,47 @@ STOPWORDS_EN = (
 )
 
 
-def tokens(col: Column | str) -> Column:
+def tokens(col: str) -> Column:
     """Whitespace tokenization; empty string -> empty array."""
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        return F.expr(_tokens_sql(c_sql))
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.split(F.trim(c), r"\s+")
-    return F.when(F.trim(c) == "", F.array().cast("array<string>")).otherwise(t)
+    return F.expr(_tokens_sql(ident(col)))
 
 
-def token_count(col: Column | str) -> Column:
+def token_count(col: str) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
+def bpe_ish_token_count(col: str) -> Column:
     """BPE-flavored token estimate: words + punctuation runs + digit
     runs each count; long words count ceil(len/4) pieces (the common
     ~4-chars-per-token heuristic).
     """
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        pieces = (f"aggregate({_tokens_sql(c_sql)}, "
-                  f"CAST(0 AS BIGINT), (acc, wrd) -> "
-                  f"acc + CAST(ceil(length(wrd) / 4.0D) AS BIGINT))")
-        punct = (f"length({c_sql}) - length(regexp_replace({c_sql}, "
-                 f"'[^\\\\w\\\\s]', ''))")
-        return F.expr(f"CAST({pieces} + {punct} AS BIGINT)")
-    c = F.col(col) if isinstance(col, str) else col
-    words = tokens(c)
-    pieces = F.aggregate(
-        words,
-        F.lit(0).cast("long"),
-        lambda acc, wrd: acc + F.ceil(F.length(wrd) / 4.0).cast("long"),
-    )
-    punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    return (pieces + punct).cast("long")
+    c = ident(col)
+    pieces = (f"aggregate({_tokens_sql(c)}, "
+              f"CAST(0 AS BIGINT), (acc, wrd) -> "
+              f"acc + CAST(ceil(length(wrd) / 4.0D) AS BIGINT))")
+    punct = (f"length({c}) - length(regexp_replace({c}, "
+             f"'[^\\\\w\\\\s]', ''))")
+    return F.expr(f"CAST({pieces} + {punct} AS BIGINT)")
 
 
-def char_ngrams(col: Column | str, n: int = 3,
-                distinct: bool = True) -> Column:
+def char_ngrams(col: str, n: int = 3, distinct: bool = True) -> Column:
     """Character n-gram (shingle) array via sequence+substr — no UDF."""
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        idx = (f"CASE WHEN length({c_sql}) >= {n} THEN "
-               f"sequence(1, length({c_sql}) - {n - 1}) "
-               f"ELSE CAST(array() AS array<int>) END")
-        grams = f"transform({idx}, i -> substr({c_sql}, i, {n}))"
-        return F.expr(f"array_distinct({grams})" if distinct else grams)
-    c = F.col(col) if isinstance(col, str) else col
+    c = ident(col)
     # NB sequence(1, 0) steps DOWN in Spark -> guard short strings.
-    idx = F.when(
-        F.length(c) >= n, F.sequence(F.lit(1), F.length(c) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(idx, lambda i: c.substr(i, F.lit(n)))
-    return F.array_distinct(grams) if distinct else grams
+    idx = (f"CASE WHEN length({c}) >= {n} THEN "
+           f"sequence(1, length({c}) - {n - 1}) "
+           f"ELSE CAST(array() AS array<int>) END")
+    grams = f"transform({idx}, i -> substr({c}, i, {n}))"
+    return F.expr(f"array_distinct({grams})" if distinct else grams)
 
 
-def word_shingles(col: Column | str, k: int = 3,
-                  distinct: bool = True) -> Column:
+def word_shingles(col: str, k: int = 3, distinct: bool = True) -> Column:
     """k-word shingles: array of space-joined consecutive token runs."""
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        return F.expr(_word_shingles_sql(c_sql, k, distinct))
-    t = tokens(col)
-    # NB sequence(1, 0) steps DOWN in Spark -> guard short documents.
-    idx = F.when(
-        F.size(t) >= k, F.sequence(F.lit(1), F.size(t) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.transform(idx, lambda i: F.array_join(F.slice(t, i, k), " "))
-    return F.array_distinct(sh) if distinct else sh
+    return F.expr(_word_shingles_sql(ident(col), k, distinct))
 
 
-def language_id_expr(col: Column | str,
+def language_id_expr(col: str,
                      markers: dict[str, tuple[str, ...]] | None = None,
                      min_hits: int = 1) -> Column:
     """Heuristic language ID: the language whose marker vocabulary hits
@@ -153,79 +99,44 @@ def language_id_expr(col: Column | str,
     Deterministic tie-break by language code.
     """
     markers = markers or LANG_MARKERS
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        t = _tokens_sql(c_sql)
-        best = "CAST(NULL AS STRING)"
-        best_score = str(min_hits - 1)
-        for lang in sorted(markers):
-            vocab = ("array(" + ",".join(
-                _sq(m) for m in markers[lang]) + ")")
-            score = f"size(array_intersect({t}, {vocab}))"
-            cond = f"{score} > {best_score}"
-            best = (f"CASE WHEN {cond} THEN {_sq(lang)} "
-                    f"ELSE {best} END")
-            best_score = (f"CASE WHEN {cond} THEN {score} "
-                          f"ELSE {best_score} END")
-        return F.expr(best)
-    t = tokens(col)
-    best = F.lit(None).cast("string")
-    best_score = F.lit(min_hits - 1)
+    t = _tokens_sql(ident(col))
+    best = "CAST(NULL AS STRING)"
+    best_score = lit(min_hits - 1)
     for lang in sorted(markers):
-        vocab = F.array(*[F.lit(m) for m in markers[lang]])
-        score = F.size(F.array_intersect(t, vocab))
-        cond = score > best_score
-        best = F.when(cond, F.lit(lang)).otherwise(best)
-        best_score = F.when(cond, score).otherwise(best_score)
-    return best
+        vocab = "array(" + ",".join(lit(m) for m in markers[lang]) + ")"
+        score = f"size(array_intersect({t}, {vocab}))"
+        cond = f"{score} > {best_score}"
+        best = f"CASE WHEN {cond} THEN {lit(lang)} ELSE {best} END"
+        best_score = f"CASE WHEN {cond} THEN {score} ELSE {best_score} END"
+    return F.expr(best)
 
 
-def quality_score_expr(col: Column | str,
+def quality_score_expr(col: str,
                        stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
     """Composite document-quality score in [0, 1]: combines length,
     mean word length, alpha ratio and stopword ratio — the standard
     cheap pre-filter family for web corpora.
     """
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        f = _quality_features_sql(c_sql, stopwords)
-        return F.expr(
-            f"0.3D * {f['len_score']} + 0.2D * {f['word_score']} "
-            f"+ 0.2D * {f['alpha_ratio']} + 0.3D * {f['stop_score']}")
-    c = F.col(col) if isinstance(col, str) else col
-    t = tokens(c)
-    n_tok = F.size(t)
-    n_chars = F.length(c)
-    mean_word = F.when(n_tok > 0, n_chars / n_tok).otherwise(F.lit(0.0))
-    alpha_ratio = F.when(
-        n_chars > 0,
-        F.length(F.regexp_replace(c, r"[^A-Za-z ]", "")) / n_chars,
-    ).otherwise(F.lit(0.0))
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    stop_hits = F.size(F.filter(t, lambda w: F.array_contains(sw, F.lower(w))))
-    stop_ratio = F.when(n_tok > 0, stop_hits / n_tok).otherwise(F.lit(0.0))
-    len_score = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-    word_score = F.when((mean_word >= 3) & (mean_word <= 10), F.lit(1.0)) \
-        .otherwise(F.lit(0.3))
-    stop_score = F.least(stop_ratio * 5.0, F.lit(1.0))
-    return (0.3 * len_score + 0.2 * word_score + 0.2 * alpha_ratio
-            + 0.3 * stop_score)
+    f = _quality_features_sql(ident(col), stopwords)
+    return F.expr(
+        f"0.3D * {f['len_score']} + 0.2D * {f['word_score']} "
+        f"+ 0.2D * {f['alpha_ratio']} + 0.3D * {f['stop_score']}")
 
 
-def _quality_features_sql(c_sql: str,
+def _quality_features_sql(c: str,
                           stopwords: tuple[str, ...]) -> dict[str, str]:
-    """SQL fragments for the shared quality features — token-for-token
-    the Column chains in quality_score_expr / quality_logit_expr."""
-    t = _tokens_sql(c_sql)
+    """SQL fragments for the features quality_score_expr and
+    quality_logit_expr share."""
+    t = _tokens_sql(c)
     n_tok = f"size({t})"
-    n_chars = f"length({c_sql})"
+    n_chars = f"length({c})"
     mean_word = (f"CASE WHEN {n_tok} > 0 THEN {n_chars} / {n_tok} "
                  f"ELSE 0.0D END")
     alpha_ratio = (
         f"CASE WHEN {n_chars} > 0 THEN "
-        f"length(regexp_replace({c_sql}, '[^A-Za-z ]', '')) "
+        f"length(regexp_replace({c}, '[^A-Za-z ]', '')) "
         f"/ {n_chars} ELSE 0.0D END")
-    sw = "array(" + ",".join(_sq(s) for s in stopwords) + ")"
+    sw = "array(" + ",".join(lit(s) for s in stopwords) + ")"
     stop_hits = (f"size(filter({t}, "
                  f"w -> array_contains({sw}, lower(w))))")
     stop_ratio = (f"CASE WHEN {n_tok} > 0 THEN {stop_hits} / {n_tok} "
@@ -240,7 +151,7 @@ def _quality_features_sql(c_sql: str,
     }
 
 
-def document_fingerprint(col: Column | str, k: int = 5) -> Column:
+def document_fingerprint(col: str, k: int = 5) -> Column:
     """Winnowing-style rolling-hash fingerprint: min 64-bit hash over
     the document's k-word shingles. Stable under whitespace noise;
     equal fingerprints are near-dup candidates.
@@ -248,10 +159,10 @@ def document_fingerprint(col: Column | str, k: int = 5) -> Column:
     sh = word_shingles(col, k=k, distinct=True)
     hashed = F.transform(sh, lambda s: F.xxhash64(s))
     return F.when(F.size(sh) > 0, F.array_min(hashed)).otherwise(
-        F.xxhash64(F.col(col) if isinstance(col, str) else col))
+        F.xxhash64(F.col(col)))
 
 
-def document_fingerprint_digest(col: Column | str, k: int = 5) -> Column:
+def document_fingerprint_digest(col: str, k: int = 5) -> Column:
     """Winnowing-style fingerprint via a native digest: min md5 hex
     over the document's k-word shingles (whole-text md5 when shorter
     than k tokens). One single-pass JVM digest per shingle — ~10x
@@ -260,31 +171,25 @@ def document_fingerprint_digest(col: Column | str, k: int = 5) -> Column:
     it bit-for-bit, unlike xxhash64). Hex strings compare bytewise in
     both engines, so min() agrees.
     """
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        sh = _word_shingles_sql(c_sql, k, True)
-        hashed = f"transform({sh}, s -> md5(encode(s, 'utf-8')))"
-        return F.expr(
-            f"CASE WHEN size({sh}) > 0 THEN array_min({hashed}) "
-            f"ELSE md5(encode({c_sql}, 'utf-8')) END")
-    c = F.col(col) if isinstance(col, str) else col
-    sh = word_shingles(c, k=k, distinct=True)
-    hashed = F.transform(sh, lambda s: F.md5(F.encode(s, "utf-8")))
-    return F.when(F.size(sh) > 0, F.array_min(hashed)).otherwise(
-        F.md5(F.encode(c, "utf-8")))
+    c = ident(col)
+    sh = _word_shingles_sql(c, k, True)
+    hashed = f"transform({sh}, s -> md5(encode(s, 'utf-8')))"
+    return F.expr(
+        f"CASE WHEN size({sh}) > 0 THEN array_min({hashed}) "
+        f"ELSE md5(encode({c}, 'utf-8')) END")
 
 
-def polynomial_hash(col: Column | str, mod: int = 1_000_000_007,
+def polynomial_hash(col: Column, mod: int = 1_000_000_007,
                     base: int = 31) -> Column:
     """Portable polynomial rolling hash over a string's code points:
     h = fold(h * base + unicode(ch)) mod m. Unlike xxhash64 this is
     reproducible in any SQL engine (the DuckDB oracle mirrors it with
     list_reduce), so fingerprint queries are differentially testable.
     Stays in whole-stage codegen: split/transform/aggregate are all
-    built-in higher-order functions.
+    built-in higher-order functions. Takes an expression: callers hash
+    derived strings (e.g. a prefixed id).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    chars = F.split(c, "")
+    chars = F.split(col, "")
     codes = F.transform(chars, lambda ch: F.ascii(ch).cast("long"))
     return F.aggregate(
         codes,
@@ -293,7 +198,7 @@ def polynomial_hash(col: Column | str, mod: int = 1_000_000_007,
     )
 
 
-def document_fingerprint_portable(col: Column | str, k: int = 5,
+def document_fingerprint_portable(col: str, k: int = 5,
                                   mod: int = 1_000_000_007,
                                   base: int = 31) -> Column:
     """Winnowing-style fingerprint with the portable polynomial hash:
@@ -307,9 +212,9 @@ def document_fingerprint_portable(col: Column | str, k: int = 5,
             F.transform(F.split(s, ""), lambda ch: F.ascii(ch).cast("long")),
             F.lit(0).cast("long"),
             lambda acc, x: (acc * base + x) % mod))
-    c = F.col(col) if isinstance(col, str) else col
     whole = F.aggregate(
-        F.transform(F.split(c, ""), lambda ch: F.ascii(ch).cast("long")),
+        F.transform(F.split(F.col(col), ""),
+                    lambda ch: F.ascii(ch).cast("long")),
         F.lit(0).cast("long"),
         lambda acc, x: (acc * base + x) % mod)
     return F.when(F.size(sh) > 0, F.array_min(hashed)).otherwise(whole)
@@ -344,45 +249,31 @@ def bm25_scores(df, text_col: str, terms: list[str],
         raise ValueError(
             f"bm25_scores: input already has column(s) {sorted(clash)} "
             "that this operator uses as temp/output names; rename them")
-    # Expressions are built as PARSED SQL text (the r15
-    # `_sig_map_to_banded` cure, guide §1.2): the per-term chain below
-    # costs ~1,500 py4j round trips (~0.4 s of driver wall per
-    # construction, measured r16) when assembled through Column
-    # operators one call at a time, and one JVM-side parse when
-    # assembled as text. The SQL mirrors the Column form token for
-    # token — same functions, same literal values, same association
-    # order — so the Catalyst tree and the float results are
-    # unchanged (equality-pinned in tests/test_text_ops.py).
-    def _d(x: float) -> str:
-        return f"{float(x)!r}D"
-
-    def _s(t: str) -> str:
-        return "'" + t.replace("'", "''") + "'"
-
-    qc = f"`{text_col}`"
-    toks_sql = (f"transform(CASE WHEN trim({qc}) = '' THEN "
-                f"CAST(array() AS array<string>) ELSE "
-                f"split(trim({qc}), '\\\\s+') END, t -> lower(t))")
+    # Parsed SQL text: the per-term chain costs ~1,500 py4j round trips
+    # when assembled through Column operators, one JVM-side parse here.
+    qc = ident(text_col)
+    k1, b = float(k1), float(b)
+    toks_sql = f"transform({_tokens_sql(qc)}, t -> lower(t))"
     df = df.withColumn("__toks", F.expr(toks_sql))
     dl_sql = "CAST(size(__toks) AS BIGINT)"
     stats = df.agg(
         F.expr("CAST(count(1) AS DOUBLE) AS __n"),
         F.expr(f"CAST(sum({dl_sql}) AS DOUBLE) AS __sumdl"),
-        *[F.expr(f"CAST(sum(CAST(array_contains(__toks, {_s(t)}) "
+        *[F.expr(f"CAST(sum(CAST(array_contains(__toks, {lit(t)}) "
                  f"AS BIGINT)) AS DOUBLE) AS __df_{i}")
           for i, t in enumerate(terms)],
     )
     out = df.crossJoin(F.broadcast(stats)).withColumn(
         "__dl", F.expr(dl_sql))
-    score_sql = _d(0.0)
+    score_sql = lit(0.0)
     for i, t in enumerate(terms):
-        tf = f"CAST(size(filter(__toks, x -> x = {_s(t)})) AS DOUBLE)"
-        idf = (f"ln((__n - __df_{i} + {_d(0.5)}) / "
-               f"(__df_{i} + {_d(0.5)}) + {_d(1.0)})")
-        denom = (f"{tf} + {_d(k1)} * ({_d(1.0)} - {_d(b)} + {_d(b)} "
+        tf = f"CAST(size(filter(__toks, x -> x = {lit(t)})) AS DOUBLE)"
+        idf = (f"ln((__n - __df_{i} + {lit(0.5)}) / "
+               f"(__df_{i} + {lit(0.5)}) + {lit(1.0)})")
+        denom = (f"{tf} + {lit(k1)} * ({lit(1.0)} - {lit(b)} + {lit(b)} "
                  f"* CAST(__dl AS DOUBLE) / (__sumdl / __n))")
         score_sql = (f"({score_sql} + {idf} * "
-                     f"({tf} * {_d(k1 + 1.0)}) / ({denom}))")
+                     f"({tf} * {lit(k1 + 1.0)}) / ({denom}))")
     return (
         out.withColumn("doc_len", F.col("__dl"))
         .withColumn("bm25", F.expr(f"round({score_sql}, 6)"))
@@ -391,7 +282,7 @@ def bm25_scores(df, text_col: str, terms: list[str],
     )
 
 
-def quality_logit_expr(col: Column | str,
+def quality_logit_expr(col: str,
                        stopwords: tuple[str, ...] = STOPWORDS_EN,
                        weights: tuple[float, float, float, float] =
                        (1.8, 2.2, 1.4, 0.9),
@@ -410,33 +301,11 @@ def quality_logit_expr(col: Column | str,
     callers derive sigmoid(z) and the keep/drop label. The expression
     shape (association order) is part of the contract — mirror it
     exactly in any oracle. Map-only, whole-stage-codegen."""
-    c_sql = _ident_sql(col)
-    if c_sql is not None:
-        f = _quality_features_sql(c_sql, stopwords)
-        w1, w2, w3, w4 = weights
-        return F.expr(
-            f"((({float(w1)!r}D * {f['len_score']} "
-            f"+ {float(w2)!r}D * {f['alpha_ratio']}) "
-            f"+ {float(w3)!r}D * {f['stop_score']}) "
-            f"+ {float(w4)!r}D * {f['word_score']}) "
-            f"+ {float(bias)!r}D")
-    c = F.col(col) if isinstance(col, str) else col
-    t = tokens(c)
-    n_tok = F.size(t)
-    n_chars = F.length(c)
-    mean_word = F.when(n_tok > 0, n_chars / n_tok).otherwise(F.lit(0.0))
-    alpha_ratio = F.when(
-        n_chars > 0,
-        F.length(F.regexp_replace(c, r"[^A-Za-z ]", "")) / n_chars,
-    ).otherwise(F.lit(0.0))
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    stop_hits = F.size(F.filter(t, lambda w: F.array_contains(sw, F.lower(w))))
-    stop_ratio = F.when(n_tok > 0, stop_hits / n_tok).otherwise(F.lit(0.0))
-    x1 = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-    x2 = alpha_ratio
-    x3 = F.least(stop_ratio * 5.0, F.lit(1.0))
-    x4 = F.when((mean_word >= 3) & (mean_word <= 10), F.lit(1.0)) \
-        .otherwise(F.lit(0.3))
-    w1, w2, w3, w4 = weights
-    return (((F.lit(w1) * x1 + F.lit(w2) * x2) + F.lit(w3) * x3)
-            + F.lit(w4) * x4) + F.lit(bias)
+    f = _quality_features_sql(ident(col), stopwords)
+    w1, w2, w3, w4 = (float(w) for w in weights)
+    return F.expr(
+        f"((({lit(w1)} * {f['len_score']} "
+        f"+ {lit(w2)} * {f['alpha_ratio']}) "
+        f"+ {lit(w3)} * {f['stop_score']}) "
+        f"+ {lit(w4)} * {f['word_score']}) "
+        f"+ {lit(float(bias))}")

@@ -18,8 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from pudl_spark.sql import ident
 
-def zorder_expr(cols: list[str | Column], bits: int = 20) -> Column:
+
+def zorder_expr(cols: list[str], bits: int = 20) -> Column:
     """Morton interleave of the low `bits` bits of each column.
 
     With n columns the result occupies n*bits bits (must stay < 63
@@ -32,27 +34,14 @@ def zorder_expr(cols: list[str | Column], bits: int = 20) -> Column:
     n = len(cols)
     if n * bits > 62:
         raise ValueError(f"{n} cols x {bits} bits overflows a long")
-    if all(isinstance(c, str) for c in cols):
-        # Parsed SQL text (r16, guide §1.2): the bits x n Column loop
-        # below costs ~30 py4j round trips per interleaved bit
-        # (~1,200 for 2 cols x 20 bits, ~0.15 s of driver wall per
-        # construction); the text form is one JVM-side parse of the
-        # identical shift/and/add chain.
-        cs_sql = [f"CAST(`{c}` AS BIGINT)" for c in cols]
-        z_sql = "CAST(0 AS BIGINT)"
-        for i in range(bits):
-            for j, c in enumerate(cs_sql):
-                z_sql = (f"({z_sql} + shiftleft((shiftright({c}, {i})"
-                         f" & 1), {i * n + j}))")
-        return F.expr(z_sql)
-    cs = [F.col(c).cast("long") if isinstance(c, str) else c.cast("long")
-          for c in cols]
-    z = F.lit(0).cast("long")
+    # Parsed SQL text: the bits x n shift/and/add chain is one
+    # JVM-side parse instead of ~30 py4j round trips per bit.
+    cs = [f"CAST({ident(c)} AS BIGINT)" for c in cols]
+    z = "CAST(0 AS BIGINT)"
     for i in range(bits):
         for j, c in enumerate(cs):
-            bit = F.shiftright(c, i).bitwiseAND(F.lit(1))
-            z = z + F.shiftleft(bit, i * n + j)
-    return z
+            z = f"({z} + shiftleft((shiftright({c}, {i}) & 1), {i * n + j}))"
+    return F.expr(z)
 
 
 def zorder_layout(df: DataFrame, cols: list[str], bits: int = 20,

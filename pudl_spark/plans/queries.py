@@ -35,6 +35,7 @@ from pudl_spark.operators import (
     union_by_name, add_run_ids, zero_pad_numeric_string,
 )
 from pudl_spark.operators.aggregate import weighted_average_expr
+from pudl_spark.sql import lit
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1146,7 +1147,7 @@ def doc_token_stats(spark, sf_dir):
     from pudl_spark.functions.text import token_count
 
     d = _t(spark, sf_dir, "documents")
-    d = d.withColumn("__tok", token_count(F.col("text")).cast("long"))
+    d = d.withColumn("__tok", token_count("text").cast("long"))
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("__tok").alias("total_tokens"),
@@ -1840,7 +1841,7 @@ def doc_fingerprints(spark, sf_dir):
     d = _spread_docs(_t(spark, sf_dir, "documents"))
     return d.select(
         "doc_id",
-        document_fingerprint_portable(F.col("text"), k=5).alias("fingerprint"))
+        document_fingerprint_portable("text", k=5).alias("fingerprint"))
 
 
 @query("calc_reconcile_orders", sql="""
@@ -2757,13 +2758,14 @@ def doc_shingle_stats(spark, sf_dir):
     from pudl_spark.functions.text import char_ngrams, token_count, word_shingles
 
     d = _spread_docs(_t(spark, sf_dir, "documents"))
-    tt = F.trim(F.col("text"))
+    # char_ngrams takes column names: trim once into a named column.
+    d = d.select("doc_id", "text", F.trim("text").alias("__tt"))
     return d.select(
         "doc_id",
         token_count("text").cast("bigint").alias("n_tokens"),
         F.size(word_shingles("text", k=3)).cast("bigint")
         .alias("n_shingles"),
-        F.size(char_ngrams(tt, n=3)).cast("bigint")
+        F.size(char_ngrams("__tt", n=3)).cast("bigint")
         .alias("n_char_trigrams"),
     )
 
@@ -3562,18 +3564,18 @@ def _fs_linkage_sql(method: str = "levenshtein") -> str:
 
     from pudl_spark.functions.linkage import bayes_factor_bits as bf
 
-    def lit(x: float) -> str:
+    def dbl(x: float) -> str:
         # bare numeric literals parse as DECIMAL in DuckDB; an explicit
         # CAST keeps the oracle in double arithmetic like Spark
         return f"CAST({x!r} AS DOUBLE)"
 
-    prior = lit(math.log2(0.001 / 0.999))
-    n = [lit(bf(m, u)) for m, u in
+    prior = dbl(math.log2(0.001 / 0.999))
+    n = [dbl(bf(m, u)) for m, u in
          [(0.5, 0.004), (0.3, 0.01), (0.1, 0.02), (0.05, 0.05),
           (0.05, 0.916)]]
-    brand_m, brand_e = lit(bf(0.9, 0.04)), lit(bf(0.1, 0.96))
-    type_m, type_e = lit(bf(0.8, 0.15)), lit(bf(0.2, 0.85))
-    p = [lit(bf(m, u)) for m, u in
+    brand_m, brand_e = dbl(bf(0.9, 0.04)), dbl(bf(0.1, 0.96))
+    type_m, type_e = dbl(bf(0.8, 0.15)), dbl(bf(0.2, 0.85))
+    p = [dbl(bf(m, u)) for m, u in
          [(0.4, 0.01), (0.4, 0.19), (0.15, 0.3), (0.05, 0.5)]]
     if method == "jaro_winkler":
         sim = "round(jaro_winkler_similarity(l_name, r_name), 6)"
@@ -5514,8 +5516,9 @@ def fs_linkage_trained(spark, sf_dir):
                "g_type int, count bigint")
     if rows:
         vals = ",".join(
-            f"({str(bool(r['is_match'])).lower()},{int(r['g_name'])},"
-            f"{int(r['g_brand'])},{int(r['g_type'])},{int(r['count'])})"
+            "(" + ",".join(lit(v) for v in (
+                bool(r["is_match"]), int(r["g_name"]), int(r["g_brand"]),
+                int(r["g_type"]), int(r["count"]))) + ")"
             for r in rows)
         local = spark.sql(
             "SELECT col1 AS is_match, CAST(col2 AS INT) AS g_name, "
@@ -6504,7 +6507,7 @@ def doc_bigram_perplexity(spark, sf_dir):
     d = _spread_docs(_t(spark, sf_dir, "documents"))
     from pudl_spark.functions.text import tokens as _tok
 
-    t = F.transform(_tok(F.col("text")), lambda w: F.lower(w))
+    t = F.transform(_tok("text"), lambda w: F.lower(w))
     # Single text pass (r15, guide §2.1/§6.1): un-pinned, Catalyst
     # replayed the regex tokenize for every consumer (c12 subtree,
     # the c1 re-aggregation, the scoring probe side, vocab — 4
@@ -6596,7 +6599,7 @@ def doc_chunk_windows(spark, sf_dir):
     W, S = 64, 48
     d = _spread_docs(_t(spark, sf_dir, "documents"))
     docs = d.filter(F.trim("text") != "").select(
-        "doc_id", _tok(F.col("text")).alias("t"))
+        "doc_id", _tok("text").alias("t"))
     n = F.size("t")
     extra = F.when(n > W, F.floor((n - W + (S - 1)) / S).cast("int")) \
         .otherwise(F.lit(0))
@@ -7084,7 +7087,7 @@ def doc_source_mixture(spark, sf_dir):
     d = _spread_docs(_t(spark, sf_dir, "documents"))
     per = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(token_count(F.col("text"))).cast("bigint").alias("n_tokens"))
+        F.sum(token_count("text")).cast("bigint").alias("n_tokens"))
     tot = per.agg(F.sum("n_tokens").alias("t"),
                   F.count(F.lit(1)).alias("k"))
     nat = F.col("n_tokens").cast("double") / F.col("t")
@@ -7671,7 +7674,8 @@ def market_share_by_year(spark, sf_dir):
     # relational algebra in one analysis pass: identical join order,
     # identical predicates, identical decimal-routed arithmetic, and
     # the same three pinned-broadcast dimensions via the hint.
-    # Physical plan verified node-for-node equal to the old chain
+    # Physical plan semantically equivalent to the old chain modulo
+    # alias-only Projects and nullability flags
     # (plans/r16/market_share_by_year.txt); results oracle-pinned.
     return spark.sql("""
         SELECT o_year,
@@ -8364,12 +8368,12 @@ def _lsh_cross_split_sql(mod: int, pair_pred: str | None = None,
     shared by every LSH-store probe query (batch = doc_id % mod == 0
     vs the rest of the corpus); a threshold or shingle change edits
     exactly one place (r7 self-review lesson #5). The streaming
-    loop's certification (queued.doc_lsh_stream_pairs) passes its
+    loop's certification (doc_lsh_stream_pairs) passes its
     own arrival-order ``pair_pred`` plus a batch_id
     ``extra_select`` — with the defaults the emitted string is
     byte-identical to the pre-r11 single-arg form, so the registered
-    oracles are untouched (frozen-hash pin in the current queue test
-    file — tests/test_r1N_queue.py, renamed each round)."""
+    oracles are untouched (frozen-hash pin in
+    tests/test_r16_queue.py)."""
     pred = (pair_pred if pair_pred is not None
             else f"a.doc_id % {mod} = 0 AND b.doc_id % {mod} <> 0")
     return rf"""
@@ -9134,7 +9138,7 @@ def doc_weighted_rendezvous_shards(spark, sf_dir):
         u = (f"((CAST(conv(substring(md5(concat(CAST(doc_id AS "
              f"STRING), ':wshard:{s}')), 1, 6), 16, 10) AS DOUBLE) "
              f"+ 0.5D) / 16777216.0D)")
-        return f"-{float(s + 1)!r}D / ln({u})"
+        return f"-{lit(float(s + 1))} / ln({u})"
 
     def argmax(n):
         # max over (score, -s): ties (never observed; u-collisions
@@ -9201,8 +9205,7 @@ def doc_weighted_sample(spark, sf_dir):
     return out.select("lang", "doc_id", "smp_rank")
 
 
-# --- r13 registrations (staged in plans/queued.py since r12,
-#     pre-verified vs DuckDB in the r12-staged queue tests) ---
+# --- r13 registrations ---
 
 _IVF_STREAM_H = _hex6("md5(CAST(seed_id AS VARCHAR) || ':cent')")
 
@@ -9867,33 +9870,27 @@ def table_quality_screens(spark, sf_dir):
             li.withColumn("cap", F.lit(0.12)), "l_discount",
             "l_tax", "cap")))
 
-    # ONE-SQL union tail (r16, guide §1.2 — the same driver-side
-    # construction-cost cure as the SQL-text builders): the eleven
-    # (name, count, metric) rows used to assemble through ~44
-    # incremental Dataset ops (per-branch agg / broadcast crossJoin /
-    # select plus ten unionByName), and classic PySpark re-analyzes
-    # the whole growing tree on every op — ~0.9 s of driver wall on
-    # trees this deep, re-paid per construction. Rendering the SAME
-    # shape (count aggregate, broadcast cross join to the 1-row
-    # metric, UNION ALL in the same branch order) as ONE SQL template
-    # over the check frames pays a single analysis pass; the check
-    # functions and their plans are untouched, so the eleven result
-    # rows are unchanged (oracle-pinned).
+    # ONE SQL template for the union tail: assembling the eleven
+    # (name, count, metric) rows through ~44 incremental Dataset ops
+    # re-analyzes the growing tree on every op (~0.9 s of driver
+    # wall); the template renders the same shape (count aggregate,
+    # broadcast cross join to the 1-row metric, UNION ALL in branch
+    # order) in one analysis pass.
     parts, rels = [], {}
     for i, (name, viol, metric) in enumerate(frames):
         rels[f"v{i}"] = viol
         if metric is None:
             parts.append(
-                f"SELECT '{name}' AS check_name, "
+                f"SELECT {lit(name)} AS check_name, "
                 f"CAST(count(1) AS BIGINT) AS n_violations, "
                 f"CAST(NULL AS DOUBLE) AS metric FROM {{v{i}}}")
         else:
             rels[f"m{i}"] = metric
             parts.append(
                 f"SELECT /*+ BROADCAST(m{i}) */ "
-                f"'{name}' AS check_name, n_violations, "
-                f"CAST(metric AS DOUBLE) AS metric "
+                f"{lit(name)} AS check_name, c{i}.n_violations, "
+                f"CAST(m{i}.metric AS DOUBLE) AS metric "
                 f"FROM (SELECT CAST(count(1) AS BIGINT) "
-                f"AS n_violations FROM {{v{i}}}) "
+                f"AS n_violations FROM {{v{i}}}) AS c{i} "
                 f"CROSS JOIN {{m{i}}} AS m{i}")
     return spark.sql("\nUNION ALL\n".join(parts), **rels)

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from pudl_spark.operators.sets import union_by_name
 from pudl_spark.schema.model import Resource
+from pudl_spark.sql import lit
 
 
 def read_csv(spark: SparkSession, path: str,
@@ -267,7 +268,7 @@ def set_table_build_params(spark, table_name: str,
     `assert_build_params_match` instead of trusting the caller to
     repeat them. Metadata-only ALTER — no Spark job, no file I/O.
     """
-    kv = ", ".join(f"'{_BUILD_PROP_PREFIX}{k}'='{v}'"
+    kv = ", ".join(f"{lit(_BUILD_PROP_PREFIX + k)}={lit(str(v))}"
                    for k, v in sorted(params.items()))
     spark.sql(f"ALTER TABLE {table_name} SET TBLPROPERTIES ({kv})")
 

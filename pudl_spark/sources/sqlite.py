@@ -53,6 +53,7 @@ def _column_ddl(f: Field) -> str:
     if c.maximum is not None:
         checks.append(f'"{f.name}" <= {c.maximum}')
     if c.enum:
+        # SQLite has no backslash escapes, so Spark's sql.lit is wrong here.
         vals = ", ".join("'" + v.replace("'", "''") + "'" for v in c.enum)
         checks.append(f'"{f.name}" IN ({vals})')
     if f.type == "boolean":

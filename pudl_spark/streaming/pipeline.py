@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from pudl_spark.sql import in_list
+
 EVENTS_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),
@@ -439,9 +441,7 @@ def lsh_ingest_stream(stream_docs: DataFrame, table_prefix: str,
                .limit(max_prune_values + 1).collect()]
         store_sets = spark.table(f"{table_prefix}_sets").select("id")
         if len(ids) <= max_prune_values:
-            from pudl_spark.catalog import in_values_expr
-            store_sets = store_sets.filter(
-                in_values_expr("id", sorted(ids)))
+            store_sets = store_sets.filter(in_list("id", sorted(ids)))
         fresh = batch.join(
             store_sets.select(F.col("id").alias(id_col)).distinct(),
             id_col, "left_anti").localCheckpoint()

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from pudl_spark.sql import ident, lit
+
 
 class ValidationError(AssertionError):
     """A data-validation check failed."""
@@ -100,9 +102,7 @@ def check_quantile_constraints(
     """
     aggs, bounds = [], []
     for i, (q, lo, hi) in enumerate(constraints):
-        aggs.append(F.expr(
-            f"percentile(`{col.replace(chr(96), chr(96) * 2)}`, {q})"
-        ).alias(f"q{i}"))
+        aggs.append(F.expr(f"percentile({ident(col)}, {q})").alias(f"q{i}"))
         bounds.append((i, q, lo, hi))
     row = df.agg(*aggs)
     checks = []
@@ -333,14 +333,8 @@ def check_columns_not_all_null(
         aggs.append(F.count(F.when(cond, F.lit(1))).alias(f"t{i}"))
         aggs.append(F.count(F.when(cond, F.col(c))).alias(f"n{i}"))
     stats = df.agg(*aggs)
-    # Spark SQL string literals interpret backslash escapes, so both
-    # the backslash and the quote need escaping or a column named
-    # "a\b" round-trips as "a<backspace>" (probed r14).
-    def lit_esc(s: str) -> str:
-        return s.replace("\\", "\\\\").replace("'", "\\'")
-
     stack_args = ", ".join(
-        f"'{lit_esc(c)}', t{i}, n{i}" for i, c in enumerate(cols))
+        f"{lit(c)}, t{i}, n{i}" for i, c in enumerate(cols))
     unpivoted = stats.select(F.expr(
         f"stack({len(cols)}, {stack_args}) as "
         f"(failing_column, total_rows_matching_condition, "
@@ -555,16 +549,15 @@ def debug_quantile_constraints(
         # row to one row per constraint — no per-constraint replay
         # of the aggregation.
         agg = df.agg(*[
-            F.expr(f"percentile(`{col.replace(chr(96), chr(96) * 2)}`,"
-                   f" {q})").alias(f"q{i}")
+            F.expr(f"percentile({ident(col)}, {q})").alias(f"q{i}")
             for i, (q, _, _) in enumerate(constraints)])
 
         def sql_bound(v):
             return ("CAST(NULL AS DOUBLE)" if v is None
-                    else f"CAST({float(v)!r} AS DOUBLE)")
+                    else lit(float(v)))
 
         cells = ", ".join(
-            f"CAST({float(q)!r} AS DOUBLE), CAST(`q{i}` AS DOUBLE), "
+            f"{lit(float(q))}, CAST(`q{i}` AS DOUBLE), "
             f"{sql_bound(lo)}, {sql_bound(hi)}"
             for i, (q, lo, hi) in enumerate(constraints))
         return agg.select(F.expr(

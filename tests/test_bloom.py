@@ -81,3 +81,21 @@ def test_bm25_matches_python_reference(spark):
     # ranking sanity: the spark-heavy docs dominate, empty doc scores 0
     assert got[3] > got[1] > got[2] == 0.0
     assert got[4] == 0.0
+
+
+def test_bm25_backslash_term_scores_like_plain_term(spark):
+    """A query term with a backslash must match its token: Spark
+    decodes ``\\b`` inside a quote-only-escaped literal, which made
+    the term ``a\\b`` silently score 0."""
+    from pudl_spark.functions.text import bm25_scores
+
+    def scores(corpus, terms):
+        df = spark.createDataFrame(list(enumerate(corpus)),
+                                   "doc_id long, text string")
+        return {r["doc_id"]: r["bm25"]
+                for r in bm25_scores(df, "text", terms).collect()}
+
+    got = scores(["a\\b c", "d e"], ["a\\b"])
+    plain = scores(["axb c", "d e"], ["axb"])
+    assert got[0] > 0
+    assert got == plain

@@ -1,18 +1,15 @@
 """Focused tests for the r16 driver-side construction fast paths:
-the schema-metadata memo in ``read_parquet_table``, the estimated
-scan-partition probe behind ``spread_small_input``, and the parsed
-``in_values_expr`` replacement for large-list ``Column.isin``.
+the schema-metadata memo in ``read_parquet_table`` and the estimated
+scan-partition probe behind ``spread_small_input``. The parsed IN list
+is pinned in tests/test_sql.py.
 """
 
 import os
 import time
 
-import pytest
-from pyspark.sql import functions as F
-
 from pudl_spark import catalog
 from pudl_spark.catalog import (
-    _estimated_scan_partitions, in_values_expr, read_parquet_table,
+    _estimated_scan_partitions, read_parquet_table,
     spread_small_input,
 )
 
@@ -67,26 +64,3 @@ def test_estimated_scan_partitions_matches_decision(spark):
     d = read_parquet_table(spark, os.path.join(SF_DIR, "nation.parquet"))
     assert spread_small_input(d, "n_nationkey") \
         .rdd.getNumPartitions() >= min(par, 2)
-
-
-def test_in_values_expr_equals_isin(spark):
-    """Same rows and the same Catalyst In() node as Column.isin —
-    including negative hashes and the Long.MIN_VALUE edge the SQL
-    parser cannot spell as a single literal."""
-    df = spark.range(0, 50).select(
-        (F.col("id") * 7 - 100).alias("v"))
-    vals = [-100, -2, 33, 5, 110, -(1 << 63)]
-    got = sorted(r["v"] for r in
-                 df.filter(in_values_expr("v", vals)).collect())
-    want = sorted(r["v"] for r in
-                  df.filter(F.col("v").isin(vals)).collect())
-    assert got == want and len(got) > 0
-    # Empty list behaves like isin() (no rows survive).
-    assert df.filter(in_values_expr("v", [])).count() == 0
-
-
-def test_in_values_expr_rejects_non_integrals():
-    with pytest.raises(TypeError):
-        in_values_expr("v", [1, "2"])
-    with pytest.raises(TypeError):
-        in_values_expr("v", [True])

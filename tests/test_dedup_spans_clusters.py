@@ -6,7 +6,6 @@ MinHash dedup — edge cases the synthetic corpus doesn't exercise
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from pudl_spark.functions.dedup import (
     duplicated_span_stats, minhash_clusters,
@@ -89,7 +88,7 @@ def test_quality_logit_empty_and_signs(spark):
                          "at by from the and of to in is it that")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {r["doc_id"]: r["z"] for r in df.select(
-        "doc_id", quality_logit_expr(F.col("text")).alias("z")).collect()}
+        "doc_id", quality_logit_expr("text").alias("z")).collect()}
     # empty text: x1=0, x2=0, x3=0, x4=0.3 -> z = 0.27 - 2.5 < 0
     assert out[1] == pytest.approx(0.9 * 0.3 - 2.5)
     # all-stopword text scores x3 at the cap

@@ -1,11 +1,9 @@
-"""Tripwires and regression pins for staged-queue work: the
-byte-identity tripwires for the `oph_banded_from_sets` build-half
-swap (LANDED r15 — `build_lsh_store` is now single-text-pass; the
-store-level tripwire below compares the live build against frozen
-pre-swap fingerprints) and the brute-force regression pin for the
-r12-unified sampler scaffold. Nothing is staged for r16 yet;
-differential tests for r16-staged queries join this file as they
-stage (the per-round rename pattern)."""
+"""Byte-identity and regression pins for the LSH store and sampler
+paths: the frozen cross-split oracle strings, the bands-from-sets
+derivation against the live text-shingling path, the single-pass
+`build_lsh_store` against frozen store fingerprints, the unified
+samplers against a brute-force reference, and the floor tool's
+watched-movers selection."""
 
 from __future__ import annotations
 

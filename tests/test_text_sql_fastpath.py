@@ -1,21 +1,27 @@
-"""Focused tests for the r16 SQL-text construction fast paths in
-``functions/text.py`` and ``operators/layout.py``: when the input
-column is a plain string name, each builder renders the IDENTICAL
-expression as SQL text (one JVM-side parse) instead of assembling it
-through per-call py4j Column operators. These tests pin the two paths
-bit-equal over a corpus chosen to hit every guard branch (empty /
-whitespace-only / short / unicode / quote / backslash inputs).
+"""Golden pins for the SQL-text expression builders in
+``functions/text.py`` and ``operators/layout.py``. The expected values
+in ``golden/text_builders.json`` were frozen from the earlier two-body
+builders (parsed SQL text and Column operators) while both bodies
+agreed bit for bit, over a corpus chosen to hit every guard branch
+(empty / whitespace-only / short / unicode / quote / backslash
+inputs).
 """
 
+import json
+import os
+
 import pytest
-from pyspark.sql import functions as F
 
 from pudl_spark.functions.text import (
     bpe_ish_token_count, char_ngrams, document_fingerprint_digest,
     language_id_expr, quality_logit_expr, quality_score_expr, tokens,
-    word_shingles, _ident_sql,
+    word_shingles,
 )
 from pudl_spark.operators.layout import zorder_expr
+
+with open(os.path.join(os.path.dirname(__file__), "golden",
+                       "text_builders.json")) as _f:
+    GOLDEN = json.load(_f)
 
 CORPUS = [
     "",                                   # empty -> empty token array
@@ -53,39 +59,23 @@ def text_df(spark):
     ).coalesce(1)
 
 
-def test_ident_sql_gate(spark):
-    """Only plain identifiers take the SQL-text path; Columns and
-    exotic names keep the operator path."""
-    assert _ident_sql("text") == "`text`"
-    assert _ident_sql("a_1") == "`a_1`"
-    assert _ident_sql(F.col("text")) is None
-    assert _ident_sql("a.b") is None
-    assert _ident_sql("a b") is None
-    assert _ident_sql("1a") is None
-
-
 @pytest.mark.parametrize("name,build", BUILDERS, ids=[b[0] for b in BUILDERS])
 def test_sql_text_path_bit_equal(text_df, name, build):
-    """String-name input (SQL-text parse) and Column input (operator
-    chain) must produce bit-identical results — same functions, same
-    literals, same association order."""
-    fast = text_df.select("id", build("text").alias("v")) \
-        .orderBy("id").collect()
-    slow = text_df.select("id", build(F.col("text")).alias("v")) \
-        .orderBy("id").collect()
-    assert fast == slow
+    """Each builder reproduces the frozen two-body output bit for bit
+    (exact floats, same array order)."""
+    assert GOLDEN["corpus"] == CORPUS
+    got = [r.v for r in text_df.select("id", build("text").alias("v"))
+           .orderBy("id").collect()]
+    assert got == GOLDEN[name]
 
 
 def test_zorder_sql_text_bit_equal(spark):
-    """zorder_expr over string names (SQL-text) vs Columns (operator
-    loop) — identical interleaved-bit values, including negatives
-    clamped by the cast and the bits cap."""
+    """zorder_expr reproduces the frozen interleaved-bit values,
+    including keys at the 20-bit edge."""
     df = spark.createDataFrame(
-        [(0, 0), (1, 1), (7, 130), (1 << 19, (1 << 20) - 1),
-         (123456, 654321), (42, 0)], ["a", "b"]).coalesce(1)
-    fast = df.select(zorder_expr(["a", "b"], bits=20).alias("z")).collect()
-    slow = df.select(
-        zorder_expr([F.col("a"), F.col("b")], bits=20).alias("z")).collect()
-    assert fast == slow
+        [tuple(r) for r in GOLDEN["zorder_rows"]], ["a", "b"]).coalesce(1)
+    got = [r.z for r in
+           df.select(zorder_expr(["a", "b"], bits=20).alias("z")).collect()]
+    assert got == GOLDEN["zorder"]
     # Distinctness sanity: interleaving is injective on these inputs.
-    assert len({r.z for r in fast}) == df.count()
+    assert len(set(got)) == df.count()
