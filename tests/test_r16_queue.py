@@ -2,7 +2,7 @@
 paths: the frozen cross-split oracle strings, the bands-from-sets
 derivation against the live text-shingling path, the single-pass
 `build_lsh_store` against frozen store fingerprints, the unified
-samplers against a brute-force reference, and the floor tool's
+samplers against a brute-force reference, and the profiling tool's
 watched-movers selection."""
 
 from __future__ import annotations
@@ -166,7 +166,7 @@ def test_singlepass_build_store_matches_frozen_fingerprint(
 
 
 def test_floor_watched_movers_selection():
-    """Pin for the r13 `floor.py --all-watched` selection rule: a
+    """Pin for the `query_profile.py --all-watched` selection rule: a
     query moves when its sf1 suite ratio changes by >1.5x in either
     direction, and queries tracked in only one artifact are always
     selected (new or dropped watches need a fresh floor)."""
@@ -174,7 +174,7 @@ def test_floor_watched_movers_selection():
     import tempfile
 
     spec = importlib.util.spec_from_file_location(
-        "floor", os.path.join(REPO, "tools", "floor.py"))
+        "query_profile", os.path.join(REPO, "tools", "query_profile.py"))
     fl = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(fl)
 

@@ -7,8 +7,12 @@ between trees), every named query (default: all registered) is built
 against SF_DIR, and its optimized logical plan is normalized:
 expression ids are renumbered in order of first appearance, lambda
 variables are renamed likewise (their names are cosmetic), and
-per-run scratch paths and UUIDs are masked. Queries that build stores
-run their eager jobs as usual; their plans compare like any other.
+per-run scratch paths and UUIDs are masked. The ``Expand`` that
+RewriteDistinctAggregates emits numbers its ``gid`` groups and orders
+its distinct columns in hash order, which changes between two builds of
+the same code, so both are put in a canonical order. Queries that build
+stores run their eager jobs as usual; their plans compare like any
+other.
 
 Usage:
   git archive <base-commit> | tar -x -C /path/to/base
@@ -33,15 +37,60 @@ _ID = re.compile(r"#(\d+)")
 _UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-"
                    r"[0-9a-f]{12}")
 _TMP = re.compile(r"/tmp/[^\s,\])]*")
+_EXPAND = re.compile(r"Expand \[(\[.*\])\], \[(.*)\]$", re.M)
 
 
-def normalize(plan: str) -> str:
+def _renumber(plan: str) -> str:
     lam: dict[str, str] = {}
     plan = _LAMBDA.sub(
         lambda m: lam.setdefault(m.group(0), f"lambda L{len(lam)}"), plan)
     ids: dict[str, str] = {}
-    plan = _ID.sub(
+    return _ID.sub(
         lambda m: ids.setdefault(m.group(1), f"#{len(ids)}"), plan)
+
+
+def _split(items: str) -> list[str]:
+    """Split ``a, f(b, c), [d]`` at its top-level commas."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(items):
+        depth += (ch in "([{") - (ch in ")]}")
+        if depth == 0 and items.startswith(", ", i):
+            out.append(items[start:i])
+            start = i + 2
+    return out + [items[start:]]
+
+
+def _canonical_gids(plan: str) -> str:
+    """Sort each distinct-aggregate ``Expand``'s distinct columns by
+    name and its rows by content, and renumber its ``gid`` literals to
+    match, here and in the aggregates that filter on them."""
+    for m in _EXPAND.finditer(plan):
+        out = _split(m.group(2))
+        g = next((i for i, a in enumerate(out) if a.startswith("gid#")),
+                 None)
+        if g is None:
+            continue
+        order = sorted(range(g), key=lambda i: (out[i].split("#")[0],
+                                                out[i]))
+        rows = [[r[i] for i in order] + r[g:] for r in
+                (_split(r[1:-1]) for r in _split(m.group(1)))]
+        rows.sort(key=lambda r: r[:g] + r[g + 1:])
+        new_gid = dict(zip((r[g] for r in rows),
+                           sorted((r[g] for r in rows), key=int)))
+        for r in rows:
+            r[g] = new_gid[r[g]]
+        cols = [out[i] for i in order] + out[g:]
+        plan = plan.replace(m.group(0), "Expand [{}], [{}]".format(
+            ", ".join(f"[{', '.join(r)}]" for r in rows), ", ".join(cols)))
+        plan = plan.replace(", ".join(out[:g + 1]),
+                            ", ".join(cols[:g + 1]))
+        plan = re.sub(rf"\b{re.escape(out[g])} = (\d+)\b",
+                      lambda v: f"{out[g]} = {new_gid[v.group(1)]}", plan)
+    return plan
+
+
+def normalize(plan: str) -> str:
+    plan = _renumber(_canonical_gids(_renumber(plan)))
     return _TMP.sub("<tmp>", _UUID.sub("<uuid>", plan))
 
 
