@@ -7,27 +7,3 @@ fingerprinting) and multimodal (binary column) plumbing. All hot-path
 math stays in pyspark.sql.functions (JVM, whole-stage codegen); Python
 appears only in the clearly-marked multimodal decode stubs.
 """
-
-from pudl_spark.functions.text import (
-    tokens, token_count, bpe_ish_token_count, char_ngrams, word_shingles,
-    language_id_expr, quality_score_expr, document_fingerprint,
-)
-from pudl_spark.functions.dedup import (
-    exact_duplicates, exact_dedup, minhash_signature, minhash_candidate_pairs,
-    minhash_dedup, simhash_expr, simhash_near_duplicates,
-    ngram_jaccard_pairs, oph_banded, oph_banded_from_sets,
-    shingle_hash_sets,
-    verified_jaccard_pairs, build_lsh_store, lsh_store_probe,
-    append_to_lsh_store, append_to_lsh_store_idempotent,
-    prefix_filter_pairs,
-)
-from pudl_spark.functions.similarity import (
-    cosine_similarity_expr, dot_expr, l2_norm_expr, brute_force_topk,
-    lsh_bucket_topk, build_ivf_store, append_to_ivf_store,
-    append_to_ivf_store_idempotent, rebuild_ivf_store, ivf_store_topk,
-)
-from pudl_spark.functions.sampling import (
-    bottomk_sample, weighted_bottomk_sample,
-)
-
-__all__ = [n for n in dir() if not n.startswith("_")]

@@ -12,6 +12,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from pudl_spark.functions.text import char_ngrams, word_shingles
+from pudl_spark.session import inherit_context
 from pudl_spark.sql import in_list
 
 
@@ -705,7 +706,8 @@ def append_to_lsh_store(spark, table_prefix: str, new_docs: DataFrame,
             sort_cols=["id"], mode="append")
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_append_bands), pool.submit(_append_sets)]:
+        for f in [pool.submit(inherit_context(spark, _append_bands)),
+                  pool.submit(inherit_context(spark, _append_sets))]:
             f.result()
     _invalidate_after_append(spark, table_prefix)
 

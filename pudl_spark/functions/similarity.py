@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from pudl_spark.session import inherit_context
 from pudl_spark.sql import in_list
 
 
@@ -639,8 +640,8 @@ def build_ivf_store(spark, emb: DataFrame, table_name: str, path: str,
                                  path=f"{path}_seeds")
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(_write_store),
-                      pool.submit(_write_sidecar)]:
+            for f in [pool.submit(inherit_context(spark, _write_store)),
+                      pool.submit(inherit_context(spark, _write_sidecar))]:
                 f.result()
         # The seeds sidecar carries the build parameters
         # (VERDICT r10 #4): appends assert nprobe/centroid_factor/

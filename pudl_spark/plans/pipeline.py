@@ -28,9 +28,11 @@ from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pudl_spark.schema.enforce import enforce_schema
+from pudl_spark.schema.enforce import check_primary_key, conform
 from pudl_spark.schema.model import Resource
+from pudl_spark.session import inherit_context
 from pudl_spark.sources.files import write_parquet_table
+from pudl_spark.validate import assert_empty
 
 AssetFn = Callable[[SparkSession, dict[str, DataFrame]], DataFrame]
 
@@ -60,6 +62,10 @@ class Asset:
     version: str = "1"
     inputs_signature: Callable[[], str] | None = None
 
+    def __post_init__(self):
+        for f in ("deps", "partition_cols", "sort_cols", "checks"):
+            setattr(self, f, tuple(getattr(self, f)))
+
 
 @dataclass
 class AssetGraph:
@@ -67,22 +73,26 @@ class AssetGraph:
 
     assets: dict[str, Asset] = field(default_factory=dict)
 
-    def add(self, name: str, deps: tuple[str, ...] = (),
-            resource: Resource | None = None,
-            partition_cols: tuple[str, ...] = (),
-            sort_cols: tuple[str, ...] = (), group: str = "core",
-            checks: tuple = (), version: str = "1",
-            inputs_signature: Callable[[], str] | None = None):
-        """Decorator: register ``fn(spark, inputs)`` as an asset."""
+    def add(self, name: str, **kw):
+        """Decorator: register ``fn(spark, inputs)`` as an asset;
+        ``kw`` are the :class:`Asset` fields after ``name`` and ``fn``."""
         def deco(fn: AssetFn) -> AssetFn:
-            self.assets[name] = Asset(
-                name=name, fn=fn, deps=tuple(deps), resource=resource,
-                partition_cols=tuple(partition_cols),
-                sort_cols=tuple(sort_cols), group=group,
-                checks=tuple(checks), version=version,
-                inputs_signature=inputs_signature)
+            self.assets[name] = Asset(name, fn, **kw)
             return fn
         return deco
+
+    def _closure(self, selection: list[str] | None) -> dict[str, list[str]]:
+        """name -> deps over ``selection`` and everything upstream of
+        it (the whole graph when None), in declaration order."""
+        wanted = set(self.assets) if selection is None else set()
+        stack = list(selection or ())
+        while stack:
+            n = stack.pop()
+            if n not in wanted:
+                wanted.add(n)
+                stack.extend(self.assets[n].deps)
+        return {n: list(a.deps) for n, a in self.assets.items()
+                if n in wanted}
 
     def fingerprints(self, selection: list[str] | None = None
                      ) -> dict[str, str]:
@@ -113,29 +123,22 @@ class AssetGraph:
     def order(self, selection: list[str] | None = None) -> list[str]:
         """Topological materialization order (full graph or the
         upstream closure of ``selection``)."""
-        wanted = set(self.assets) if selection is None else set()
-        if selection is not None:
-            stack = list(selection)
-            while stack:
-                n = stack.pop()
-                if n in wanted:
-                    continue
-                wanted.add(n)
-                stack.extend(self.assets[n].deps)
-        ts = TopologicalSorter(
-            {n: [d for d in self.assets[n].deps if d in wanted]
-             for n in wanted})
-        return list(ts.static_order())
+        return list(TopologicalSorter(self._closure(selection))
+                    .static_order())
 
     def materialize(self, spark: SparkSession, store_dir: str,
                     selection: list[str] | None = None,
-                    skip_existing: bool = False,
                     incremental: bool = False,
                     max_workers: int = 1) -> dict[str, str]:
         """Run the DAG; each asset is written to
         ``store_dir/<name>.parquet`` and downstream assets read the
         materialized copy (checkpoint semantics — shallow lineage,
         restartable). Returns name -> path.
+
+        Before the write the sink only coerces the frame to the
+        declared ``resource`` (no Spark job); after it, one read-back of
+        the written table runs the primary-key check and every
+        ``Asset.checks`` entry, before the manifest records the asset.
 
         ``incremental=True`` skips any asset whose fingerprint (code
         version + external-input signature + upstream closure, see
@@ -144,23 +147,21 @@ class AssetGraph:
         rebuild after a one-asset change recomputes only that asset's
         downstream cone, not the world. The manifest updates after
         EVERY asset, so an interrupted run resumes where it stopped.
+        There is no ``skip_existing``: an existing output is no reason
+        to skip.
 
-        ``max_workers > 1`` materializes INDEPENDENT assets
-        concurrently (ref: Dagster's multiprocess executor): a
-        topological wavefront feeds a thread pool, and each thread
-        submits its asset's Spark jobs from the shared session —
-        Spark schedules concurrent jobs fine (set the FAIR scheduler
-        for even sharing), so a wide DAG keeps a 1000-executor
-        cluster busy instead of serializing one asset at a time.
-        Manifest writes are lock-protected; per-asset semantics
-        (skip, checks, schema enforcement) are identical to the
-        serial path.
+        A topological wavefront hands ready assets, in declaration
+        order, to a pool of ``max_workers`` threads that inherit the
+        caller's job group and tags (ref: Dagster's multiprocess
+        executor); the first failure re-raises with the assets not yet
+        handed out unbuilt. The default is 1 because callers' asset and
+        check callables need not be thread-safe (a tracer with one
+        open span, say).
         """
         import json
         import threading
         from concurrent.futures import (FIRST_COMPLETED,
                                         ThreadPoolExecutor, wait)
-        from graphlib import TopologicalSorter as _TS
 
         manifest_path = os.path.join(store_dir, "_manifest.json")
         manifest: dict[str, str] = {}
@@ -168,9 +169,9 @@ class AssetGraph:
             with open(manifest_path) as f:
                 manifest = json.load(f)
         fps = self.fingerprints(selection) if incremental else {}
-        order = self.order(selection)
+        graph = self._closure(selection)
         paths = {name: os.path.join(store_dir, f"{name}.parquet")
-                 for name in order}
+                 for name in graph}
         lock = threading.Lock()
 
         def run_one(name: str) -> None:
@@ -179,23 +180,22 @@ class AssetGraph:
             if (incremental and manifest.get(name) == fps[name]
                     and os.path.exists(dest)):
                 return
-            if skip_existing and os.path.exists(dest):
-                return
             inputs = {d: spark.read.parquet(paths[d]) for d in asset.deps}
             df = asset.fn(spark, inputs)
+            pk = asset.resource.primary_key if asset.resource else ()
             if asset.resource is not None:
-                df = enforce_schema(df, asset.resource)
+                df = conform(df, asset.resource)
             write_parquet_table(
                 df, dest,
                 partition_cols=list(asset.partition_cols) or None,
                 sort_cols=list(asset.sort_cols) or None)
-            if asset.checks:
-                from pudl_spark.validate import assert_empty
-
-                materialized = spark.read.parquet(dest)
+            if pk or asset.checks:
+                # The frame's schema spares a footer-reading job.
+                written = spark.read.schema(df.schema).parquet(dest)
+                if pk:
+                    check_primary_key(written, pk, asset.resource.name)
                 for idx, check in enumerate(asset.checks):
-                    assert_empty(check(materialized),
-                                 f"{name}.check[{idx}]")
+                    assert_empty(check(written), f"{name}.check[{idx}]")
             if incremental:
                 with lock:
                     manifest[name] = fps[name]
@@ -203,24 +203,22 @@ class AssetGraph:
                     with open(manifest_path, "w") as f:
                         json.dump(manifest, f, indent=0, sort_keys=True)
 
-        if max_workers <= 1:
-            for name in order:
-                run_one(name)
-            return paths
-
-        wanted = set(order)
-        ts = _TS({n: [d for d in self.assets[n].deps if d in wanted]
-                  for n in wanted})
+        target = inherit_context(spark, run_one)
+        rank = {name: i for i, name in enumerate(graph)}
+        ts = TopologicalSorter(graph)
         ts.prepare()
+        ready: list[str] = []
         with ThreadPoolExecutor(max_workers=max_workers) as ex:
             pending: dict = {}
             while ts.is_active():
-                for name in ts.get_ready():
-                    pending[ex.submit(run_one, name)] = name
-                if not pending:
-                    break
+                ready = sorted([*ready, *ts.get_ready()], key=rank.get)
+                # Hand out no more than there are workers, so nothing
+                # sits in the pool's queue when an asset fails.
+                while ready and len(pending) < max_workers:
+                    name = ready.pop(0)
+                    pending[ex.submit(target, name)] = name
                 done, _ = wait(pending, return_when=FIRST_COMPLETED)
                 for fut in done:
-                    ts.done(pending.pop(fut))
                     fut.result()        # re-raise asset failures
+                    ts.done(pending.pop(fut))
         return paths

@@ -71,26 +71,27 @@ def check_primary_key(df: DataFrame, pk: tuple[str, ...] | list[str],
                       name: str = "df") -> None:
     """Raise on null or duplicate primary keys (ref: classes.py:2088+).
 
-    Both checks are single aggregations; nothing large is collected.
+    One aggregation: the per-key counts reduce to one row of null-key
+    rows and duplicate rows, so one action and nothing large collected.
     """
     pk = list(pk)
-    null_pred = None
+    n = F.col("count")
+    null_key = F.lit(False)
     for c in pk:
-        cond = F.col(c).isNull()
-        null_pred = cond if null_pred is None else (null_pred | cond)
-    agg = df.groupBy(*pk).count()
-    stats = agg.agg(
-        F.sum(F.when(F.col("count") > 1, F.col("count"))).alias("dups"),
+        null_key = null_key | F.col(c).isNull()
+    stats = df.groupBy(*pk).count().agg(
+        F.sum(F.when(null_key, n)).alias("nulls"),
+        F.sum(F.when(n > 1, n)).alias("dups"),
     ).collect()[0]
-    nulls = df.filter(null_pred).limit(1).count()
-    if nulls:
+    if stats["nulls"]:
         raise SchemaError(f"{name}: null primary key values in {pk}")
     if stats["dups"]:
         raise SchemaError(f"{name}: {stats['dups']} duplicate PK rows on {pk}")
 
 
-def enforce_schema(df: DataFrame, resource: Resource) -> DataFrame:
-    """format_df + strict checks (ref: metadata/classes.py:2088-2127)."""
+def conform(df: DataFrame, resource: Resource) -> DataFrame:
+    """Raise on missing columns, then ``format_df``; starts no Spark
+    job (the sink's pre-write half of ``enforce_schema``)."""
     missing = set(resource.field_names) - set(df.columns)
     missing = {
         m for m in missing
@@ -98,7 +99,12 @@ def enforce_schema(df: DataFrame, resource: Resource) -> DataFrame:
     }
     if missing:
         raise SchemaError(f"{resource.name}: missing columns {sorted(missing)}")
-    out = format_df(df, resource)
+    return format_df(df, resource)
+
+
+def enforce_schema(df: DataFrame, resource: Resource) -> DataFrame:
+    """format_df + strict checks (ref: metadata/classes.py:2088-2127)."""
+    out = conform(df, resource)
     if resource.primary_key:
         check_primary_key(out, resource.primary_key, resource.name)
     return out

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the local[32] test harness. On a real cluster the
@@ -58,6 +59,18 @@ def get_spark(app_name: str = "pudl_spark", master: str | None = None,
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    # Python workers import pudl_spark (UDFs pickle by reference),
+    # whatever directory the application was launched from.
+    key = "spark.executorEnv.PYTHONPATH"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf[key] = os.pathsep.join(p for p in (root, conf.get(key)) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def inherit_context(spark: SparkSession, fn):
+    """``pyspark.inheritable_thread_target(spark)(fn)``, which fails
+    when pinned-thread mode is off; then there is nothing to inherit."""
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)

@@ -198,3 +198,110 @@ def test_parallel_materialization_propagates_failures(spark, tmp_path):
 
     with pytest.raises(RuntimeError, match="asset exploded"):
         g.materialize(spark, str(tmp_path / "fail"), max_workers=2)
+
+
+def _jobs_in_group(spark, group, run) -> set[int]:
+    """Run ``run()`` under job group ``group``; return the group's job
+    ids. ``materialize`` submits every job from its pool threads, so a
+    non-empty result shows that they inherited the group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_null_key_asset_raises_stays_out_of_manifest_and_is_retried(
+        spark, tmp_path):
+    import json
+
+    calls = []
+    fixed = {"v": False}
+    g = AssetGraph()
+
+    @g.add("ok")
+    def ok(sp, inputs):
+        calls.append("ok")
+        return sp.range(3)
+
+    @g.add("keyed", resource=HOURLY_RES)
+    def keyed(sp, inputs):
+        calls.append("keyed")
+        event = "'click'" if fixed["v"] else "CAST(NULL AS STRING)"
+        return sp.sql(f"SELECT {event} AS event_type, "
+                      "TIMESTAMP'2024-01-01 00:00:00' AS hour, 1 AS n_events")
+
+    store = str(tmp_path)
+    with pytest.raises(SchemaError, match="null primary key"):
+        g.materialize(spark, store, incremental=True)
+    with open(os.path.join(store, "_manifest.json")) as f:
+        assert set(json.load(f)) == {"ok"}
+
+    fixed["v"] = True
+    g.materialize(spark, store, incremental=True)
+    assert calls == ["ok", "keyed", "keyed"]
+    with open(os.path.join(store, "_manifest.json")) as f:
+        assert set(json.load(f)) == {"ok", "keyed"}
+
+
+def test_failing_root_cancels_queued_roots(spark, tmp_path):
+    """One worker: ready roots run in declaration order, and the first
+    failure leaves the roots still queued unbuilt."""
+    calls = []
+    g = AssetGraph()
+
+    @g.add("boom")
+    def boom(sp, inputs):
+        calls.append("boom")
+        raise RuntimeError("asset exploded")
+
+    def later(sp, inputs):
+        calls.append("later")
+        return sp.range(1)
+
+    g.add("later_a")(later)
+    g.add("later_b")(later)
+
+    with pytest.raises(RuntimeError, match="asset exploded"):
+        g.materialize(spark, str(tmp_path), max_workers=1)
+    assert calls == ["boom"]
+    assert not os.path.exists(tmp_path / "later_a.parquet")
+
+
+def test_asset_threads_inherit_the_callers_job_group(spark, tmp_path):
+    g = AssetGraph()
+
+    @g.add("src")
+    def src(sp, inputs):
+        return sp.range(10)
+
+    @g.add("dst", deps=("src",))
+    def dst(sp, inputs):
+        return inputs["src"].withColumn("twice", F.col("id") * 2)
+
+    for workers in (1, 2):
+        group = f"materialize-inherit-{workers}"
+        assert _jobs_in_group(spark, group, lambda: g.materialize(
+            spark, str(tmp_path / str(workers)), max_workers=workers))
+
+
+def test_sink_key_check_runs_fewer_jobs(spark, tmp_path):
+    """A one-asset graph with a primary key ran 6 jobs at the parent
+    revision: the write, and a pre-write key check of two actions on
+    the unwritten frame (a 3-job aggregation and a 2-job null probe).
+    The sink now checks the key with one aggregation over the written
+    table, read back with the frame's schema (4 jobs in all)."""
+    g = AssetGraph()
+
+    @g.add("out_hourly_counts", resource=HOURLY_RES)
+    def out(sp, inputs):
+        return sp.createDataFrame(
+            [("click", 1), ("view", 2), ("buy", 3)],
+            "event_type string, n_events int").withColumn(
+                "hour", F.lit("2024-01-01 00:00:00").cast("timestamp"))
+
+    jobs = _jobs_in_group(spark, "sink-key-check",
+                          lambda: g.materialize(spark, str(tmp_path)))
+    assert 0 < len(jobs) < 6, len(jobs)
