@@ -365,7 +365,7 @@ def cluster_embeddings_ivf(df: DataFrame, id_col: str = "vec_id",
     # Pinning the assignment runs it once; the union branches read
     # the materialized blocks. Lazy: nothing materializes until the
     # query's own action, so no extra driver job; blocks die with
-    # the job (the oph_banded tradeoff note).
+    # the job (see `dedup.oph_banded_from_sets`).
     assigned = base.join(best, "vec_id", "left").localCheckpoint(
         eager=False)
     blocked = assigned.filter(F.col("cluster_seed").isNotNull()).select(

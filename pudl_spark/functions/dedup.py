@@ -43,147 +43,59 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one row (min id) per distinct text."""
-    w_min = (
-        df.groupBy(text_col).agg(F.min(id_col).alias(id_col))
-    )
-    return df.join(w_min, on=[text_col, id_col], how="left_semi")
+# ---------------------------------------------------------------- minhash
 
-
-# -------------------------------------------------------------- minhash
-
-_MINHASH_PRIME = 2147483647  # 2^31 - 1 (Mersenne)
-
-
-def _minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the universal-hash family
-    h_i(x) = (a_i * x + b_i) mod p. Bounded so products stay < 2^62
-    (Spark 4 runs ANSI mode; silent overflow is not an option).
-    """
-    import random
-
-    rng = random.Random(seed)
-    return [(rng.randrange(1, _MINHASH_PRIME),
-             rng.randrange(0, _MINHASH_PRIME)) for _ in range(num_hashes)]
-
-
-def minhash_signature(col: str, num_hashes: int = 64,
-                      shingle_k: int = 3, use_words: bool = True) -> Column:
-    """MinHash signature via one xxhash64 per shingle + a universal
-    hash family (a*h + b) mod p per permutation — one string hash and
-    64 long multiply-adds instead of 64 string hashes (~10x cheaper on
-    wide corpora). Shingle arrays never leave the executor.
-    """
-    sh = (word_shingles(col, k=shingle_k) if use_words
-          else char_ngrams(col, n=shingle_k))
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s),
-                                            F.lit(_MINHASH_PRIME)))
-    p = F.lit(_MINHASH_PRIME)
-    coeffs = _minhash_coeffs(num_hashes)
-    a_arr = F.array(*[F.lit(a).cast("long") for a, _ in coeffs])
-    b_arr = F.array(*[F.lit(b).cast("long") for _, b in coeffs])
-    init = F.array_repeat(F.lit(_MINHASH_PRIME).cast("long"), num_hashes)
-    # One fold over the base hashes; per shingle, all num_hashes
-    # permutations update via zip_with — the base hash computes once.
-    return F.aggregate(
-        base,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.zip_with(a_arr, b_arr, lambda a, b: (h * a + b) % p),
-            lambda x, y: F.least(x, y),
-        ),
-    )
-
-
-def oph_banded(df: DataFrame, id_col: str, text_col: str,
-               num_hashes: int = 64, bands: int = 16,
-               shingle_k: int = 3,
-               checkpoint: bool = True) -> DataFrame:
+def oph_banded_from_sets(sets_df: DataFrame, num_hashes: int = 64,
+                         bands: int = 16,
+                         checkpoint: bool = True) -> DataFrame:
     """LSH band keys ``(id, band, bucket)`` from OPH minhash
-    signatures — the shared blocking primitive for the one-shot pair
-    miner (`minhash_candidate_pairs`) and the persisted incremental
-    index (`build_lsh_store` / `lsh_store_probe`).
+    signatures of an ``(id, __set)`` shingle-hash frame —
+    `shingle_hash_sets`' output or a persisted ``{prefix}_sets``
+    table. The one blocking primitive of the pair miner
+    (`minhash_candidate_pairs`) and the persisted index
+    (`build_lsh_store`, `append_to_lsh_store`, `lsh_store_probe`);
+    deriving bands from stored hash arrays spares a second text
+    pass. ``sets_df`` is already `_spread` across cores, so no
+    repartition is added here.
+
+    One-permutation hashing (OPH, Li/Owen/Zhang 2012): instead of
+    num_hashes independent permutation minima (num_hashes agg-buffer
+    updates per shingle), each distinct shingle hash routes to bin
+    h mod num_hashes and each occupied (id, bin) keeps ONE min; the
+    per-bin minima then pivot into the fixed-length signature in a
+    num_hashes-times-smaller aggregation. Empty bins densify by
+    ROTATION (Shrivastava & Li 2014): bin i copies the next
+    non-empty bin scanning i+1, i+2, ... mod num_hashes, which keeps
+    the per-bin collision probability ~= j for short documents (a
+    global-min fill would correlate every empty bin and miss
+    high-j short-doc pairs), so the banding recall bound matches
+    classic MinHash. Precision is exact regardless: every caller
+    verifies true Jaccard on the full sets.
+
+    Densification runs as log2(num_hashes) coalesce-doubling
+    passes: after pass r, __v{r}[i] = first non-empty among bins
+    i .. i+2^r-1 (mod nb). Each pass is its own projected column so
+    the expression tree stays linear, and each is one parsed SQL
+    expression rather than Column-DSL lambdas, which cost hundreds
+    of py4j round trips per call for the same Catalyst tree.
+
+    ``checkpoint`` pins the signatures with a lazy localCheckpoint
+    before the band explode, so the pair miner's self-join reads
+    them once instead of recomputing them per side; the blocks are
+    owned by the RDD, so the ContextCleaner reclaims them with the
+    frame (persist() would leak until an unpersist a lazily returned
+    frame can never schedule). Single-consumer callers (the store
+    writes and the probe) pass False.
     """
-    df = _spread(df, id_col)
-    # One-permutation hashing (OPH, Li/Owen/Zhang 2012 — the scheme
-    # production corpus dedup uses): instead of num_hashes independent
-    # permutation minima (num_hashes agg-buffer updates PER SHINGLE —
-    # the dominant cost at corpus scale), hash each distinct shingle
-    # once, route it to bin h mod num_hashes, and take ONE min per
-    # occupied (id, bin). That is a single cheap agg update per
-    # shingle; the per-bin minima then pivot into the fixed-length
-    # signature in a second, num_hashes-times-smaller aggregation.
-    # Empty bins densify by ROTATION (Shrivastava & Li 2014, improved
-    # densification): bin i copies the value of the next non-empty
-    # bin scanning i+1, i+2, ... mod num_hashes — computed in
-    # log2(num_hashes) coalesce-doubling passes over the array, each
-    # a cheap map-side projection. Rotation keeps the per-bin
-    # collision probability ~= j even for short documents (a
-    # global-min fill would correlate every empty bin on one value
-    # and measurably miss high-j short-doc pairs), so the banding
-    # recall bound matches classic MinHash. Verified empirically:
-    # every exact-Jaccard pair >= threshold at sf0.01 and sf0.1 is
-    # produced (oracle equality is the driver gate), and precision is
-    # exact regardless — the verify step computes true Jaccard on the
-    # full shingle-hash sets.
     nb = F.lit(num_hashes)
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(word_shingles(text_col, k=shingle_k),
-                            lambda s: F.xxhash64(s)))).alias("__sh"),
-    )
+    exploded = sets_df.select(
+        "id", F.explode("__set").alias("__sh"))
     binned = exploded.groupBy(
         "id", F.pmod("__sh", nb).alias("__bin")
     ).agg(F.min("__sh").alias("__mh"))
     sig_map = binned.groupBy("id").agg(
         F.map_from_entries(
             F.collect_list(F.struct("__bin", "__mh"))).alias("__m"))
-    return _sig_map_to_banded(sig_map, num_hashes, bands, checkpoint)
-
-
-def _sig_map_to_banded(sig_map: DataFrame, num_hashes: int,
-                       bands: int, checkpoint: bool = True) -> DataFrame:
-    """Shared OPH tail: the per-id (bin -> min) map densifies by
-    rotation and explodes into ``(id, band, bucket)`` band keys —
-    the common back half of `oph_banded` and `oph_banded_from_sets`.
-
-    Rotation densification by coalesce-doubling: after pass r,
-    __v{r}[i] = first non-empty among bins i .. i+2^r-1 (mod nb).
-    Each pass materializes as its own projected column so the
-    expression tree stays linear (re-referencing the prior array
-    EXPRESSION would copy its subtree and blow up codegen).
-
-    SQL-string expressions, not the Column DSL (r15, guide §1.2
-    per-task... rather per-CALL work): the python-built lambdas paid
-    hundreds of py4j round trips — ~0.5 s of driver time per call,
-    re-paid by every probe/build/append/miner — while one parsed
-    expr per projection yields the IDENTICAL Catalyst tree (pinned
-    by the byte-identity tripwires in tests/test_r16_queue.py and
-    the store fingerprints) at ~10x less construction cost.
-
-    Lazy localCheckpoint before the band explode, not persist():
-    same effect (the signature table materializes once at first
-    action, so the banded frame's self-join in the pair miner reads
-    stored blocks twice instead of recomputing the signatures per
-    side), but the blocks are owned by the RDD, so the
-    ContextCleaner reclaims them when the returned frame is
-    garbage-collected. persist() registers with the cache manager
-    and leaks until an explicit unpersist, which a lazily-returned
-    frame can never schedule.
-
-    ``checkpoint=False`` (r15) for SINGLE-consumer callers — the
-    store build/append writes and the probe's full-scan regime,
-    which each evaluate the banded frame exactly once: there the
-    checkpoint materializes an O(corpus)/O(batch) signature block
-    set nobody reads twice (and under AQE the .rdd conversion runs
-    the signature stages eagerly at construction). Rows identical
-    either way — pinned by the store fingerprints and the
-    tests/test_r16_queue.py tripwires.
-    """
     rows_per_band = num_hashes // bands
     hi = num_hashes - 1
     sig_map = sig_map.withColumn(
@@ -206,45 +118,10 @@ def _sig_map_to_banded(sig_map: DataFrame, num_hashes: int,
         for b in range(bands))
     # Bands shuffle WITHOUT the verify sets (ids + two longs only —
     # the explode multiplies rows by `bands`, so payload width matters
-    # 16x); sets re-join below for the candidate pairs only.
+    # 16x); sets re-join for the candidate pairs only.
     return sig_agg.select(
         "id", F.explode(F.expr(f"array({entries})")).alias("bb")
     ).select("id", "bb.band", "bb.bucket")
-
-
-def oph_banded_from_sets(sets_df: DataFrame, num_hashes: int = 64,
-                         bands: int = 16,
-                         checkpoint: bool = True) -> DataFrame:
-    """LSH band keys derived from an already-computed ``(id, __set)``
-    shingle-hash frame — `shingle_hash_sets`' output, or the
-    persisted ``{prefix}_sets`` table — instead of re-shingling raw
-    text (VERDICT r9 #6 / r10 #8, the single-text-pass derivation;
-    landed r12 for the one-shot miner, see `minhash_candidate_pairs`;
-    the `build_lsh_store` twin — bands from the just-written sets
-    table — landed r15).
-
-    Byte-identical to `oph_banded` BY CONSTRUCTION: the sets frame
-    holds exactly the distinct xxhash64 shingle hashes oph_banded's
-    explode produces, and the OPH bin/min/densify/band pipeline
-    below applies the same expressions in the same order — pinned
-    per-row-equal in tests/test_r16_queue.py at two SFs (the
-    divergence tripwire).
-
-    Input contract: ``sets_df`` is `shingle_hash_sets` output (or
-    the persisted ``{prefix}_sets`` table), which is ALREADY
-    `_spread` across cores — this derivation adds no repartition of
-    its own.
-    """
-    nb = F.lit(num_hashes)
-    exploded = sets_df.select(
-        "id", F.explode("__set").alias("__sh"))
-    binned = exploded.groupBy(
-        "id", F.pmod("__sh", nb).alias("__bin")
-    ).agg(F.min("__sh").alias("__mh"))
-    sig_map = binned.groupBy("id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("__bin", "__mh"))).alias("__m"))
-    return _sig_map_to_banded(sig_map, num_hashes, bands, checkpoint)
 
 
 def shingle_hash_sets(df: DataFrame, id_col: str, text_col: str,
@@ -302,31 +179,15 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     with id_a < id_b. The verify join re-reads only candidate rows'
     shingles; candidates ~ O(true dups), not O(n^2).
 
-    SINGLE TEXT PASS (r12, the oph_banded_from_sets swap's one-shot
-    half): the corpus shingles ONCE into the checkpointed sets
-    frame; the band keys derive from those stored hash arrays
-    (`oph_banded_from_sets` — byte-identical to `oph_banded` by
-    construction, tripwire-pinned) and the verify join reads the
-    same materialization. The pre-swap shape shingled the corpus
-    twice — once for the bands aggregate, once for the verify side —
-    and text shingling (regex split + slice + hash per position) is
-    the dominant map-side cost at corpus scale.
-
-    Checkpoint tradeoff (ADVICE r12): the lazy localCheckpoint
-    materializes the full sets frame as MEMORY_AND_DISK executor
-    blocks — an O(corpus-hash-arrays) block footprint for the job's
-    duration — and localCheckpoint blocks do NOT survive executor
-    loss, so on a lossy cluster a dead executor fails the job
-    instead of recomputing its partitions (same caveat as
-    oph_banded's sig_agg checkpoint). Measured faster than the
-    second text pass at both tested scales; on a long-running or
-    preemptible cluster, prefer `df.checkpoint()` with a reliable
-    checkpoint dir if job restarts are more expensive than the
-    HDFS round-trip.
+    The corpus shingles ONCE into a lazily checkpointed sets frame:
+    the band keys derive from those hash arrays
+    (`oph_banded_from_sets`) and the verify join reads the same
+    blocks. Text shingling is the dominant map-side cost, and the
+    checkpoint measured faster than a second text pass. Its blocks
+    do not survive executor loss; on a preemptible cluster, where a
+    restart costs more than a reliable checkpoint, use
+    `df.checkpoint()` instead.
     """
-    # Bands shuffle WITHOUT the verify sets (ids + two longs only —
-    # the explode multiplies rows by `bands`, so payload width matters
-    # 16x); sets re-join for the candidate pairs only.
     sets = shingle_hash_sets(df, id_col, text_col,
                              shingle_k).localCheckpoint(eager=False)
     banded = oph_banded_from_sets(sets, num_hashes, bands)
@@ -345,10 +206,7 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def prefix_filter_pairs(df: DataFrame, id_col: str, text_col: str,
                         shingle_k: int = 3,
-                        jaccard_threshold: float = 0.7,
-                        suffix_filter: bool = False,
-                        broadcast_freq: bool = False,
-                        checkpoint_sets: bool = True) -> DataFrame:
+                        jaccard_threshold: float = 0.7) -> DataFrame:
     """DETERMINISTICALLY COMPLETE near-dup pairs via prefix filtering
     (SSJoin, Chaudhuri/Ganti/Kaushik ICDE 2006; All-Pairs, Bayardo et
     al. WWW 2007; PPJoin, Xiao et al. WWW 2008) — the exact
@@ -371,52 +229,9 @@ def prefix_filter_pairs(df: DataFrame, id_col: str, text_col: str,
     first means the join's fan-out per token is small by
     construction (the frequent tokens that would explode the join
     land in suffixes). Returns (id_a, id_b, jaccard), id_a < id_b.
-
-    ``suffix_filter`` (default OFF — measured) adds PPJoin+'s
-    remaining pruning stage (Xiao et al. WWW 2008, Algorithm 3 at
-    depth 1): for each pair's FIRST common prefix token, partition
-    both suffixes around the probing token in the middle of one
-    suffix and lower-bound their Hamming distance — pairs whose
-    resulting overlap ceiling falls below the threshold never reach
-    the exact verify. Sound by the same one-direction argument as
-    the prefix bounds: the Hamming partition bound is exact integer
-    arithmetic, the only float (the required-overlap threshold) is
-    shaved DOWNWARD, and the first-match row of any QUALIFYING pair
-    always survives the join-level filters, so the per-pair min is
-    the true first match and zero common tokens precede it (overlap
-    = 1 + overlap of the suffixes exactly). Why off by default: in
-    the paper the suffix probe runs IN MEMORY while both records are
-    already at hand; distributed, it costs two extra candidate-sized
-    joins against the full ordered-token arrays. Measured at t=0.5:
-    candidates drop 14% (124.8k -> 107.1k at sf0.1; 12.7M -> 10.9M
-    at 10x), but wall goes +12% drift-adjusted at sf0.1 and ~6x at
-    10x data (31 s -> 179 s, SCALE.md r9) — the exact verify it
-    saves is cheaper than the joins it adds at every measured scale.
-    Turn it on only when documents are long enough (and true-dup
-    density low enough) that per-pair verification dominates the
-    pair-side joins.
-
-    Skew note (ADVICE r8): both the prefix and the suffix stage join
-    the corpus-sized exploded token table to the frequency table on
-    ``__tok``, so a very frequent token lands all its occurrences in
-    one shuffle partition. The build side is one row per token —
-    replicable — so AQE's skew-join split (on by default) handles
-    the hot partitions; when the vocabulary is known to be bounded
-    (e.g. fixed shingle space), ``broadcast_freq=True`` skips that
-    shuffle entirely.
-
-    SINGLE TEXT PASS (r13, the same cure the r12 minhash-miner swap
-    applied): the sets frame feeds the token explode (twice — freq
-    build and the prefix join's probe side) AND both verify sides,
-    so un-checkpointed the corpus re-shingles at every appearance
-    (regex split + slice + hash per position — the dominant map-side
-    cost). ``checkpoint_sets=True`` (default, measured faster at
-    sf0.1 and 10x) lazily localCheckpoints the sets frame so every
-    consumer reads the stored hash arrays instead. Same tradeoff as
-    the minhash miner: O(corpus) MEMORY_AND_DISK executor blocks for
-    the job's duration, and localCheckpoint blocks do not survive
-    executor loss — pass False on a lossy/preemptible cluster to
-    trade recompute cost for fault tolerance.
+    The token-to-frequency join sends every occurrence of a hot
+    token to one shuffle partition; its build side is one row per
+    token, so AQE's skew-join split handles those partitions.
     """
     t = jaccard_threshold
 
@@ -430,14 +245,13 @@ def prefix_filter_pairs(df: DataFrame, id_col: str, text_col: str,
         # lengthens a prefix; the exact verify keeps precision.
         return F.ceil(x - F.lit(1e-9))
 
-    sets = shingle_hash_sets(df, id_col, text_col, shingle_k)
-    if checkpoint_sets:
-        sets = sets.localCheckpoint(eager=False)
+    # Lazy pin: the sets feed the token explode twice and both verify
+    # sides, which would otherwise each re-shingle the corpus.
+    sets = shingle_hash_sets(df, id_col, text_col,
+                             shingle_k).localCheckpoint(eager=False)
     tok = sets.select("id", F.size("__set").alias("__n"),
                       F.explode("__set").alias("__tok"))
     freq = tok.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    if broadcast_freq:
-        freq = F.broadcast(freq)
     tokf = tok.join(freq, "__tok")
     w = Window.partitionBy("id").orderBy(F.col("__df").asc(),
                                          F.col("__tok").asc())
@@ -463,96 +277,19 @@ def prefix_filter_pairs(df: DataFrame, id_col: str, text_col: str,
     b_left = F.col("b.__n") - F.col("b.__rn") + F.lit(1)
     min_overlap = (F.lit(t) / F.lit(1.0 + t)
                    * (F.col("a.__n") + F.col("b.__n")) - F.lit(1e-9))
-    joined = (prefix.alias("a")
-              .join(prefix.alias("b"),
-                    on=[F.col("a.__tok") == F.col("b.__tok"),
-                        F.col("a.id") < F.col("b.id"),
-                        F.col("b.__n")
-                        >= ceil_safe(F.lit(t) * F.col("a.__n")),
-                        F.col("a.__n")
-                        >= ceil_safe(F.lit(t) * F.col("b.__n")),
-                        F.least(a_left, b_left) >= min_overlap]))
-    if suffix_filter:
-        # One row per pair at its FIRST common prefix token: common
-        # tokens appear in the same relative order on both sides
-        # (one global canonical order), so the lexicographic
-        # struct-min picks the match that no common token precedes —
-        # the position the suffix filter's overlap accounting is
-        # exact at. Same shuffle the dropDuplicates path pays; the
-        # payload grows by 4 ints.
-        matches = joined.select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.struct(F.col("a.__rn").alias("rn_a"),
-                     F.col("b.__rn").alias("rn_b"),
-                     F.col("a.__n").alias("n_a"),
-                     F.col("b.__n").alias("n_b")).alias("__m"))
-        first = (matches.groupBy("id_a", "id_b")
-                 .agg(F.min("__m").alias("__m")))
-        cand = (_ppjoin_suffix_filter(first, tokf, t)
-                .select("id_a", "id_b"))
-    else:
-        cand = (joined.select(F.col("a.id").alias("id_a"),
-                              F.col("b.id").alias("id_b"))
-                .dropDuplicates(["id_a", "id_b"]))
+    cand = (prefix.alias("a")
+            .join(prefix.alias("b"),
+                  on=[F.col("a.__tok") == F.col("b.__tok"),
+                      F.col("a.id") < F.col("b.id"),
+                      F.col("b.__n")
+                      >= ceil_safe(F.lit(t) * F.col("a.__n")),
+                      F.col("a.__n")
+                      >= ceil_safe(F.lit(t) * F.col("b.__n")),
+                      F.least(a_left, b_left) >= min_overlap])
+            .select(F.col("a.id").alias("id_a"),
+                    F.col("b.id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"]))
     return verified_jaccard_pairs(cand, sets, sets, "id_a", "id_b", t)
-
-
-def _ppjoin_suffix_filter(first: DataFrame, tokf: DataFrame,
-                          t: float) -> DataFrame:
-    """PPJoin+ depth-1 suffix filter over first-match candidate pairs.
-
-    ``first``: (id_a, id_b, __m{rn_a, rn_b, n_a, n_b}) with __m the
-    pair's first common prefix token's canonical positions. ``tokf``:
-    the exploded token table with ``__df`` attached. For the pair's
-    suffixes sx = x[rn_a+1..], sy = y[rn_b+1..] (canonical order),
-    probe the middle token of sy, partition both suffixes around it,
-    and lower-bound the Hamming distance H(sx, sy) by the partition
-    imbalance — since overlap(sx, sy) = (|sx|+|sy|-H)/2 and the
-    total overlap is exactly 1 + overlap(sx, sy) at the first match,
-    any pair with 1 + (|sx|+|sy|-H_lb)/2 below the required overlap
-    provably fails the threshold. All counts are exact integers; the
-    only float (the required overlap) is shaved downward, so the
-    filter can only UNDER-prune — completeness is preserved and the
-    exact verify restores precision.
-    """
-    ordered = (tokf.groupBy("id")
-               .agg(F.sort_array(F.collect_list(
-                   F.struct(F.col("__df").alias("df"),
-                            F.col("__tok").alias("tok"))))
-                    .alias("__ord")))
-    f = (first
-         .join(ordered.select(F.col("id").alias("id_a"),
-                              F.col("__ord").alias("__oa")), "id_a")
-         .join(ordered.select(F.col("id").alias("id_b"),
-                              F.col("__ord").alias("__ob")), "id_b"))
-    i, j = F.col("__m.rn_a"), F.col("__m.rn_b")
-    na, nb = F.col("__m.n_a"), F.col("__m.n_b")
-    sxn, syn = na - i, nb - j
-    # Probing token: the middle of sy (1-based offset ceil(|sy|/2)).
-    mid = F.floor((syn + F.lit(1)) / F.lit(2)).cast("long")
-    wm = F.element_at(F.col("__ob"), (j + mid).cast("int"))
-    syl, syr = mid - F.lit(1), syn - mid
-    # Everything at position <= rn_a in x precedes wm in canonical
-    # order (x[rn_a] is the shared token, which sits BEFORE wm in
-    # y), so full-array counts need only subtract i — no slicing.
-    lt = F.size(F.filter(
-        F.col("__oa"),
-        lambda e: (e["df"] < wm["df"])
-        | ((e["df"] == wm["df"]) & (e["tok"] < wm["tok"]))))
-    gt = F.size(F.filter(
-        F.col("__oa"),
-        lambda e: (e["df"] > wm["df"])
-        | ((e["df"] == wm["df"]) & (e["tok"] > wm["tok"]))))
-    sxl, sxr = lt - i, gt
-    d = sxn - sxl - sxr  # 1 iff wm itself is in sx (sets: 0 or 1)
-    hlb = (F.abs(sxl - syl) + F.abs(sxr - syr)
-           + F.when(d >= 1, F.lit(0)).otherwise(F.lit(1)))
-    # Empty sy: the partition probe is undefined — H is exactly |sx|.
-    hlb = F.when(syn == 0, sxn).otherwise(hlb)
-    bound = F.lit(1.0) + (sxn + syn - hlb) / F.lit(2.0)
-    req = (F.lit(t) / F.lit(1.0 + t) * (na + nb) - F.lit(1e-9))
-    return (f.filter(bound >= req)
-            .select("id_a", "id_b", "__m"))
 
 
 def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
@@ -660,12 +397,10 @@ def append_to_lsh_store(spark, table_prefix: str, new_docs: DataFrame,
     rebuild(corpus UNION batch) UNCONDITIONALLY (unlike the IVF
     append, which also needs the batch to contribute no seeds) —
     pinned in tests/test_lsh_store.py. Work is O(batch): the batch
-    text is shingled ONCE (r15, the append half of the build's
-    single-text-pass shape — the batch's shingle sets materialize
-    via localCheckpoint and the band keys derive from the
-    materialized rows through `oph_banded_from_sets`, byte-identical
-    to direct banding by the pinned derivation), two bucketed
-    appends, nothing corpus-sized. Parameters are ASSERTED against
+    text is shingled ONCE (its shingle sets materialize via
+    localCheckpoint and the band keys derive from those rows through
+    `oph_banded_from_sets`), two bucketed appends, nothing
+    corpus-sized. Parameters are ASSERTED against
     the ones the build persisted as table properties (VERDICT r10
     #4): a mismatched append raises instead of silently writing
     signatures the probes can't match.
@@ -863,7 +598,6 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
                     num_hashes: int = 64, bands: int = 16,
                     shingle_k: int = 3,
                     jaccard_threshold: float = 0.7,
-                    prune_scan: bool = True,
                     max_prune_values: int = 2048,
                     batch_rows: int | None = None,
                     min_store_bytes: int = 4 << 30,
@@ -872,69 +606,36 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
     signature only the batch, bucket-join against ``{prefix}_bands``,
     exact-verify against ``{prefix}_sets``. Returns
     (new_id, corpus_id, jaccard). The signature/banding parameters
-    must match the ones the store was built with.
+    must match the ones the store was built with (asserted against
+    the build's table properties).
 
-    With ``prune_scan`` (VERDICT r7 #8) SMALL probe batches also
-    SKIP store bytes, not just the Exchange: the batch's band keys
-    (EXACTLY batch_size * bands rows, bounded by the regime gate)
-    are collected ONCE and served back as a LocalRelation — the
-    ivf_store_topk serving pattern (r16) — so the OPH pipeline runs
-    exactly once, the distinct band-bucket hashes derive in Python
-    for free, and the candidate join broadcasts the local band keys
-    against a store scan In()-pruned to them. The surviving
-    candidate PAIRS (bounded by the batch's dup pairs) collect the
-    same way: the verify action then reads a local pair list and an
-    In()-pruned sets scan instead of re-running the candidate join.
-    Both tables are written SORTED by exactly the pruned columns, so
-    parquet row-group min/max stats prune the index files the batch
-    never touches — per-batch read cost follows the batch, not the
-    corpus. The regime gate matters: an In() literal beyond a few
-    thousand values costs more to PLAN than the scan it saves
-    (measured: an ~11k-value batch regressed 3.9 s -> 13 s at
-    sf0.1, ~10x at sf1) — so a batch whose band-hash set exceeds
-    ``max_prune_values`` takes the plain full-scan join, which is
-    already the right plan for large batches (the join amortizes the
-    index scan over many probe rows). Results are join-exact in both
-    regimes: pruned == unpruned (longs and doubles round-trip the
-    driver exactly, so the LocalRelation serving changes no values).
+    Two regimes, gated by ``n_batch * bands <= max_prune_values``
+    (``batch_rows`` passes a known batch size so the gate costs no
+    count over the batch's lineage):
 
-    ``batch_rows``: callers that already know the batch size pass it
-    here so the regime gate never triggers an extra action over the
-    batch's lineage (a DERIVED batch — the output of a cleaning
-    pipeline — would otherwise re-run that pipeline just to be
-    counted, ADVICE r8). In the small regime the RAW batch is
-    checkpointed once, so its upstream pipeline evaluates exactly
-    once; the shingle-hash sets and the band keys are both derived
-    from that checkpoint (a sets checkpoint measured slower at this
-    batch size). The large regime keeps everything lazy and
-    pipelined in the one returned action.
+    * SMALL: the raw batch is checkpointed once, so its upstream
+      pipeline evaluates exactly once. Its band keys (exactly
+      n * bands rows) are collected once and served back as a
+      single-slice LocalRelation, so the candidate join broadcasts
+      them. When the two index tables hold at least
+      ``min_store_bytes`` (0 forces it), the store scans are also
+      In()-pruned: to the batch's band buckets, and, once the
+      candidate pairs are collected the same way, to their corpus
+      ids. Both tables are sorted by exactly those columns, so
+      parquet min/max stats skip the files the batch never touches.
+      Below a few GB a full scan of the index is cheaper than the
+      extra collects pruning costs, hence the byte gate.
+    * LARGE: everything stays lazy inside the one returned action;
+      an In() list beyond a few thousand values costs more to plan
+      than the scan it saves, and the join amortizes the index scan
+      over many probe rows. ``max_prune_values=0`` forces this
+      regime for any non-empty batch.
 
-    ``min_store_bytes`` (r9, measured): pruning exists to SKIP INDEX
-    BYTES, so it must not engage unless there are enough bytes to
-    skip. The pruned path pays ~3 extra driver-scheduled jobs (the
-    two value collects, one of which re-runs the batch-sized
-    candidate join) — ~2 s of fixed overhead on local[32] — while a
-    FULL scan of a toy index costs ~1 s: head-to-head at sf0.1 (117-
-    doc batch) the full path won 0.90 s vs 2.86 s, and at 10x data
-    1.1-2.1 s vs 4.6-5.1 s — the index is simply too small for
-    byte-skipping to matter below a few GB. The default engages
-    In() pruning only when the two index tables exceed 4 GiB
-    (roughly where a full scan's read time crosses the fixed prune
-    overhead at ~2 GB/s local scan rate; at 100 TB-class indexes the
-    pruned path is the only sane one). The size check is a
-    filesystem metadata call, not a job. Pass 0 to force pruning
-    (the certified small-probe query does, so the In() path keeps
-    hash-grade correctness evidence); results are join-exact in
-    every regime: pruned == unpruned.
+    Results are join-exact in every regime (longs and doubles
+    round-trip the driver exactly). ``recover=False`` skips the
+    compaction-swap recovery check for callers that ran it on both
+    tables this batch already.
     """
-    # Signature compatibility is asserted against the build's
-    # persisted parameters (VERDICT r10 #4): a probe signaturing the
-    # batch under different num_hashes/bands/shingle_k than the
-    # index would MISS pairs with no error. Driver-side catalog
-    # lookup, no job. Recovery first: a probe must never read a
-    # table some process left half-swapped mid-compaction (r11);
-    # ``recover=False`` skips it for callers that ran recovery on
-    # both tables this batch already (the streaming loop).
     from pudl_spark.sources.files import assert_build_params_match
 
     if recover:
@@ -951,61 +652,25 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
     store_bands = spark.table(f"{table_prefix}_bands")
     store_sets = spark.table(f"{table_prefix}_sets")
     pruned = False
-    # Cheap regime detection first: batch_count * bands upper-bounds
-    # the distinct band hashes, so a large batch skips pruning after
-    # at most one column-less count (zero extra actions when the
-    # caller supplies batch_rows) — never paying the signature pass
-    # twice.
     n = batch_rows if batch_rows is not None else new_docs.count()
     small = n * bands <= max_prune_values
     if small:
-        # Small by the gate: checkpoint the batch once (its upstream
-        # pipeline evaluates exactly once — ADVICE r8), then band it
-        # WITHOUT the signature checkpoint: nb is collected whole
-        # below, so the OPH pipeline runs exactly once regardless
-        # and a sig checkpoint would only add a materialization.
-        # (A sets-checkpoint + derived-banding variant was measured
-        # SLOWER here — +1 job and ~+0.9 s per probe at sf0.1: at
-        # this batch size the extra checkpoint barrier costs more
-        # than the second ~hundred-doc shingle pass it saves.)
         new_docs = new_docs.localCheckpoint()
-        new_sets = shingle_hash_sets(new_docs, id_col, text_col,
-                                     shingle_k)
-        nb = oph_banded(new_docs, id_col, text_col, num_hashes,
-                        bands, shingle_k, checkpoint=False)
-    else:
-        # LARGE regime: keep everything lazy and pipelined inside
-        # the one returned action — banding and verify each shingle
-        # the text map-side, which measures FASTER than a sets
-        # checkpoint + derived banding (r16 interleaved A/B floors:
-        # the checkpoint barrier + its AQE stage jobs cost ~0.4-0.6 s
-        # per probe at sf0.1, more than the second pipelined shingle
-        # pass saves — the same negative result as the r15 build-
-        # fusion attempt).
-        new_sets = shingle_hash_sets(new_docs, id_col, text_col,
-                                     shingle_k)
-        nb = oph_banded(new_docs, id_col, text_col, num_hashes,
-                        bands, shingle_k, checkpoint=False)
+    # No signature checkpoint: the small regime collects nb whole and
+    # the large one reads it once. A sets checkpoint shared with the
+    # verify side measured slower in both regimes than shingling the
+    # batch twice.
+    new_sets = shingle_hash_sets(new_docs, id_col, text_col, shingle_k)
+    nb = oph_banded_from_sets(new_sets, num_hashes, bands,
+                              checkpoint=False)
     if small:
-        # Small by the gate: nb is EXACTLY n * bands <=
-        # max_prune_values rows of (id, band, bucket) — collect it
-        # ONCE and serve it back as a single-slice LocalRelation
-        # (the ivf_store_topk r15 pattern). The OPH densify pipeline
-        # runs exactly once (no signature checkpoint, no separate
-        # bucket-distinct collect), the candidate join broadcasts
-        # the local band keys against the store scan, and the
-        # In() bucket list derives in Python for free. Longs
-        # round-trip driver-exact, so the join is unchanged.
         nbrows = nb.collect()
         nb = spark.createDataFrame(
             spark.sparkContext.parallelize(nbrows, 1), nb.schema)
-        if (prune_scan
-                and (min_store_bytes <= 0
-                     or _table_location_bytes(
-                         spark, f"{table_prefix}_bands")
-                     + _table_location_bytes(
-                         spark, f"{table_prefix}_sets")
-                     >= min_store_bytes)):
+        if (min_store_bytes <= 0
+                or _table_location_bytes(spark, f"{table_prefix}_bands")
+                + _table_location_bytes(spark, f"{table_prefix}_sets")
+                >= min_store_bytes):
             pruned = True
             store_bands = store_bands.filter(in_list(
                 "bucket", sorted({r["bucket"] for r in nbrows})))
@@ -1019,15 +684,10 @@ def lsh_store_probe(spark, table_prefix: str, new_docs: DataFrame,
         .dropDuplicates(["new_id", "corpus_id"])
     )
     if pruned:
-        # Bounded collect: one row per candidate pair (~the batch's
-        # dup pairs plus banding collisions, O(batch)). Only in the
-        # small-batch regime — the collect evaluates the (pruned,
-        # batch-sized) candidate join once over the LOCAL band keys
-        # and the bucket-pruned store scan. Collecting the PAIRS
-        # (not just the corpus ids) lets the verify action read a
-        # LocalRelation instead of re-running the candidate join a
-        # second time (r16): its two joins then probe only the
-        # checkpointed batch sets and the id-pruned store sets scan.
+        # Bounded collect of the candidate pairs (~the batch's dup
+        # pairs plus banding collisions): the verify then reads a
+        # LocalRelation and an id-pruned sets scan instead of
+        # re-running the candidate join.
         crows = cand.limit(max_prune_values + 1).collect()
         if len(crows) <= max_prune_values:
             cand = spark.createDataFrame(

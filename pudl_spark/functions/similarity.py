@@ -317,7 +317,7 @@ def _topn_centroid_fold(vec: str, nrm: str, n: int):
     row_number replay uses).
 
     Built as ONE parsed SQL expression (r16, guide §1.2 — the same
-    per-call construction-cost cure as dedup's `_sig_map_to_banded`):
+    per-call construction-cost cure as dedup's `oph_banded_from_sets`):
     the Column-DSL form paid ~0.3 s of py4j round trips per CALL,
     re-paid up to three times per IVF store lifecycle (seed-cell
     assignment, corpus argmax, probe) and once per cluster/dedup
@@ -359,10 +359,8 @@ def ivf_store_topk(spark, table_name: str, queries: DataFrame,
                    centroid_factor: float = 2.0,
                    query_id_col: str = "query_id",
                    vec_col: str = "embedding",
-                   prune_scan: bool = True,
                    max_prune_values: int = 2048,
                    batch_rows: int | None = None,
-                   seed_modulus: int | None = None,
                    assert_params: bool = True,
                    recover: bool = True) -> DataFrame:
     """ANN top-k served FROM the persisted cell-bucketed IVF store —
@@ -379,12 +377,13 @@ def ivf_store_topk(spark, table_name: str, queries: DataFrame,
     rows) — the probe never re-derives them from the corpus-sized
     store (VERDICT r7 #1: the per-probe O(corpus) seed rescan is
     gone; the one remaining store access is the candidate fetch).
-    With ``prune_scan`` (default) the probed cell ids — bounded by
-    n_queries * seed_probe — are collected and pushed into the store
-    scan as an In() filter, so the (cell, vec_id)-sorted layout
-    prunes row groups by min/max stats: only ~seed_probe cells'
-    members (~seed_probe * corpus/k rows) are READ per batch, not
-    just joined away. ``centroid_factor`` must match the build.
+    When n_queries * seed_probe <= ``max_prune_values`` the probed
+    cell ids are collected and pushed into the store scan as an In()
+    filter, so the (cell, vec_id)-sorted layout prunes row groups by
+    min/max stats: only ~seed_probe cells' members (~seed_probe *
+    corpus/k rows) are READ per batch, not just joined away; larger
+    batches (or ``max_prune_values=0``) take the full-scan join.
+    ``centroid_factor`` must match the build.
 
     Returns (query_id, neighbor_id, score, rank) with rank <= k.
     Approximate like any IVF probe: neighbors outside the probed
@@ -398,13 +397,8 @@ def ivf_store_topk(spark, table_name: str, queries: DataFrame,
     collected ONCE — n_queries * seed_probe rows, small by the gate —
     and served back as a LocalRelation, so the scoring/window
     pipeline runs exactly once and the candidate join broadcasts the
-    local probe rows against the pruned store scan. ``seed_modulus``
-    is accepted for one deprecation cycle and ignored: since the
-    ``{table}_seeds`` sidecar landed, the seed rule is implied by
-    the store build (passing a value merely no-ops instead of
-    raising TypeError on pre-sidecar call sites).
+    local probe rows against the pruned store scan.
     """
-    del seed_modulus  # implied by the build's persisted sidecar
     # Recovery first: a probe must never read a store some process
     # left half-swapped mid-compaction (r11). One catalog lookup +
     # one fs.exists when clean; ``recover=False`` skips it for
@@ -458,43 +452,25 @@ def ivf_store_topk(spark, table_name: str, queries: DataFrame,
               .select("query_id", "__qvec", "__qnrm",
                       F.col("seed_id").alias("cell")))
     n_q = batch_rows if batch_rows is not None else queries.count()
-    if prune_scan and n_q * seed_probe <= max_prune_values:
-        # Regime-gated like lsh_store_probe, with the CHEAP gate
-        # first: n_queries * seed_probe upper-bounds the probed cell
-        # count, so a bulk batch skips after at most one column-less
-        # count (zero extra actions when the caller passes
-        # batch_rows) — never paying the scoring/window pipeline an
-        # extra time (an In() literal beyond a few thousand values
-        # also costs more to plan than the scan it saves; bulk
-        # batches are the full-join regime anyway). For small
-        # serving batches the bounded collect's In() predicate
-        # reaches the parquet reader, so the cell-sorted store files
-        # prune to the probed cells' row groups instead of scanning
-        # the corpus and joining it away.
-        # Small by the gate: ONE bounded collect replaces the r8
-        # localCheckpoint + separate cell collect (two driver
-        # actions, and the checkpointed scoring pipeline stayed in
-        # the served plan as extra AQE stages). The collected rows
-        # come back as a LocalRelation probe side — the scoring/
-        # window pipeline runs exactly once, the In() cell list
-        # derives in Python for free, and the served plan is just
-        # broadcast(local probe rows) join pruned store scan.
-        # Doubles/arrays round-trip driver-exact, so candidate
-        # scores are bit-identical to the distributed path.
+    if n_q * seed_probe <= max_prune_values:
+        # n_queries * seed_probe bounds the probed cell count, so
+        # the gate costs at most one column-less count. ONE bounded
+        # collect serves the scored probe rows back as a
+        # LocalRelation: the scoring/window pipeline runs once, the
+        # In() cell list derives in Python, and the In() predicate
+        # reaches the parquet reader of the cell-sorted store.
+        # Doubles and arrays round-trip the driver exactly.
         qrows = qseeds.limit(max_prune_values + 1).collect()
         if len(qrows) <= max_prune_values:
-            # Single-slice parallelize (r15): the default fans these
-            # few rows over defaultParallelism near-empty partitions
-            # and the candidate join's broadcast build pays ~32 empty
-            # tasks (measured ~0.4 s per probe).
+            # One slice: the default would fan these few rows over
+            # defaultParallelism near-empty broadcast-build tasks.
             qseeds = spark.createDataFrame(
                 spark.sparkContext.parallelize(qrows, 1), qseeds.schema)
             cells = sorted({r["cell"] for r in qrows})
             s = s.filter(in_list("cell", cells))
         else:
-            # Caller understated batch_rows: stay distributed (the
-            # bulk full-join regime); cut lineage as before so the
-            # probe pipeline is not replayed per consumer.
+            # Caller understated batch_rows: stay distributed, with
+            # the lineage cut so the probe pipeline runs once.
             qseeds = qseeds.localCheckpoint()
     cand = qseeds.join(s, "cell").select(
         "query_id", F.col("vec_id").alias("neighbor_id"),
@@ -703,12 +679,10 @@ def append_to_ivf_store(spark, table_name: str, new_vecs: DataFrame,
         spark, f"{table_name}_seeds",
         {"nprobe": nprobe, "centroid_factor": centroid_factor,
          "num_buckets": num_buckets}, "append_to_ivf_store")
-    rows = _assign_to_store_cells(spark, table_name, new_vecs,
-                                  nprobe, centroid_factor)
-    from pudl_spark.sources.files import write_bucketed_table
-
-    write_bucketed_table(rows, table_name, ["cell"], num_buckets,
-                         sort_cols=["cell", "vec_id"], mode="append")
+    _append_store_rows(_assign_to_store_cells(spark, table_name,
+                                              new_vecs, nprobe,
+                                              centroid_factor),
+                       table_name, num_buckets)
 
 
 def rebuild_ivf_store(spark, table_name: str, path: str,
@@ -867,6 +841,18 @@ def rebuild_ivf_store(spark, table_name: str, path: str,
         raise IOError(f"failed to delete reseed snapshot {src_dir}")
 
 
+def _append_store_rows(rows: DataFrame, table_name: str,
+                       num_buckets: int, recover: bool = True) -> None:
+    """Append (cell, vec_id, embedding, nrm) rows under the build's
+    bucket/sort spec, so downstream cell-keyed reads stay
+    Exchange-free across appends."""
+    from pudl_spark.sources.files import write_bucketed_table
+
+    write_bucketed_table(rows, table_name, ["cell"], num_buckets,
+                         sort_cols=["cell", "vec_id"], mode="append",
+                         recover=recover)
+
+
 def _assign_to_store_cells(spark, table_name: str,
                            new_vecs: DataFrame, nprobe: int,
                            centroid_factor: float) -> DataFrame:
@@ -891,16 +877,11 @@ def _assign_to_store_cells(spark, table_name: str,
 
 
 def append_to_ivf_store_idempotent(spark, table_name: str,
-                                   new_vecs: DataFrame | None = None,
+                                   new_vecs: DataFrame,
                                    num_buckets: int = 8,
                                    nprobe: int = 2,
                                    centroid_factor: float = 2.0,
-                                   max_prune_values: int = 2048,
-                                   assigned_rows: DataFrame | None = None,
-                                   guard: bool = True,
-                                   assert_params: bool = True,
-                                   recover: bool = True
-                                   ) -> None:
+                                   max_prune_values: int = 2048) -> None:
     """Redelivery-safe IVF store append — the exactly-once variant a
     streaming foreachBatch sink needs (r11; the LSH twin is
     `dedup.append_to_lsh_store_idempotent`). A blind re-append after
@@ -950,42 +931,19 @@ def append_to_ivf_store_idempotent(spark, table_name: str,
     versioning problem (carry a version column and dedupe before the
     sink, or route mutations through a periodic full rebuild from
     the versioned source of truth).
-
-    ``assigned_rows``/``guard``/``assert_params``/``recover``: a
-    caller that already assigned the batch (the streaming loop
-    assigns once for its skip-detection and reuses the rows) passes
-    them here with ``guard=False`` when the rows are already
-    anti-joined (`antijoin_store_ids` is the one shared guard
-    block), ``assert_params=False`` when it asserted this batch
-    already, and ``recover=False`` when it ran the compaction-swap
-    recovery check this batch already, so the hot path never repeats
-    a sidecar derivation, a guard scan, or a catalog round-trip.
     """
-    from pudl_spark.sources.files import (
-        assert_build_params_match, write_bucketed_table,
-    )
+    from pudl_spark.sources.files import assert_build_params_match
 
-    if (new_vecs is None) == (assigned_rows is None):
-        raise ValueError(
-            "append_to_ivf_store_idempotent: pass exactly one of "
-            "new_vecs (raw vectors to assign) or assigned_rows "
-            "(pre-assigned (cell, vec_id, embedding, nrm) rows).")
-    if assert_params:
-        assert_build_params_match(
-            spark, f"{table_name}_seeds",
-            {"nprobe": nprobe, "centroid_factor": centroid_factor,
-             "num_buckets": num_buckets},
-            "append_to_ivf_store_idempotent")
-    rows = (assigned_rows if assigned_rows is not None
-            else _assign_to_store_cells(spark, table_name, new_vecs,
-                                        nprobe, centroid_factor
-                                        ).localCheckpoint())
-    if guard:
-        rows = antijoin_store_ids(spark, table_name, rows,
-                                  max_prune_values)
-    write_bucketed_table(rows, table_name, ["cell"], num_buckets,
-                         sort_cols=["cell", "vec_id"], mode="append",
-                         recover=recover)
+    assert_build_params_match(
+        spark, f"{table_name}_seeds",
+        {"nprobe": nprobe, "centroid_factor": centroid_factor,
+         "num_buckets": num_buckets},
+        "append_to_ivf_store_idempotent")
+    rows = _assign_to_store_cells(spark, table_name, new_vecs, nprobe,
+                                  centroid_factor).localCheckpoint()
+    _append_store_rows(
+        antijoin_store_ids(spark, table_name, rows, max_prune_values),
+        table_name, num_buckets)
 
 
 def antijoin_store_ids(spark, table_name: str, rows: DataFrame,

@@ -8694,13 +8694,7 @@ def doc_prefix_filter_dup_pairs(spark, sf_dir):
     prefix, so candidates are a provable superset and the exact
     verify restores precision. Rarest-token-first ordering keeps the
     candidate join's per-token fan-out small (frequent tokens land in
-    suffixes and never join). The PPJoin+ depth-1 SUFFIX filter
-    exists (`suffix_filter=True`, completeness fuzz-pinned) but runs
-    OFF here as measured: its ~14% candidate cut (124.8k -> 107.1k
-    at sf0.1, 12.7M -> 10.9M at 10x) costs two extra candidate-sized
-    array joins that read +12% drift-adjusted at sf0.1 and ~6x at
-    10x data (SCALE.md r9) — the exact verify it would save is the
-    cheaper stage at every measured scale. Same definitional
+    suffixes and never join). Same definitional
     exact-Jaccard oracle as the minhash path: two algorithm
     families, one truth.
     """

@@ -110,13 +110,11 @@ def enforce_schema(df: DataFrame, resource: Resource) -> DataFrame:
     return out
 
 
-def check_foreign_key(child: DataFrame, child_cols: list[str],
-                      parent: DataFrame, parent_cols: list[str]) -> int:
-    """Count FK orphans via left-anti join (ref: helpers.py:193).
-
-    Returns the orphan count (0 == integrity holds). The parent side is
-    deduplicated to its key columns, so for dimension tables the
-    anti-join broadcasts.
+def fk_orphan_rows(child: DataFrame, child_cols: list[str],
+                   parent: DataFrame, parent_cols: list[str]) -> DataFrame:
+    """Child rows with a fully non-null key that no parent row holds
+    (ref: helpers.py:193). The parent side is deduplicated to its key
+    columns and broadcast, which suits dimension-table parents.
     """
     parent_keys = parent.select(
         *[F.col(p).alias(c) for c, p in zip(child_cols, parent_cols)]
@@ -125,10 +123,16 @@ def check_foreign_key(child: DataFrame, child_cols: list[str],
     for c in child_cols:
         cond = F.col(c).isNotNull()
         pred = cond if pred is None else (pred & cond)
-    orphans = child.filter(pred).join(
+    return child.filter(pred).join(
         F.broadcast(parent_keys), on=child_cols, how="left_anti"
     )
-    return orphans.count()
+
+
+def check_foreign_key(child: DataFrame, child_cols: list[str],
+                      parent: DataFrame, parent_cols: list[str]) -> int:
+    """Count FK orphan rows (0 == integrity holds); the frame form is
+    `validate.check_foreign_key_df`."""
+    return fk_orphan_rows(child, child_cols, parent, parent_cols).count()
 
 
 def encode_column(df: DataFrame, col: str, code_map: dict[str, str],

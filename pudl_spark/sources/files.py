@@ -180,8 +180,7 @@ def write_bucketed_table(df: DataFrame, table_name: str,
                          sort_cols: list[str] | None = None,
                          mode: str = "overwrite",
                          path: str | None = None,
-                         recover: bool = True,
-                         distribute: bool = True) -> None:
+                         recover: bool = True) -> None:
     """Bucketed managed table — the shuffle-free-join layout.
 
     At 100 TB the dominant cost of fact-to-fact joins (orders x
@@ -197,55 +196,29 @@ def write_bucketed_table(df: DataFrame, table_name: str,
     discipline for query-scoped stores) instead of a managed table
     under the warehouse dir.
 
-    ``distribute`` (r15 optimization): hash-repartition on the bucket
-    columns into ``num_buckets`` partitions before the write.
-    Spark's bucketed writer otherwise emits one file per (input
-    partition x bucket present in it) — a 32-partition upstream at
-    8 buckets wrote 32-64 files of 14-60 KB per store table
-    (measured), paying listing + footer + commit overhead per file
-    on every write AND every probe. ``repartition(n, cols)`` uses
-    the SAME hash family as the bucket spec (pmod of Murmur3), so
-    each write task holds exactly one bucket and each write emits
-    exactly ``num_buckets`` files — the Iceberg
-    ``write.distribution-mode=hash`` discipline. The heavy upstream
-    compute (shingling, scoring) stays below the exchange at full
-    parallelism; only the index-sized rows shuffle once. File size
-    at scale is governed by ``num_buckets``, which is the layout's
-    scale knob already. Set False to keep the old write-local
-    behavior (no exchange) when the caller has pre-partitioned.
+    The rows hash-repartition on the bucket columns into
+    ``num_buckets`` partitions first. ``repartition`` shares the
+    bucket spec's pmod(Murmur3) hash, so each write task holds one
+    bucket and a write emits exactly ``num_buckets`` files instead
+    of one per (input partition x bucket) — pinned by the file-count
+    test in tests/test_bucketed.py. The cost is a write stage of
+    ``num_buckets`` tasks; ``num_buckets`` is the knob for both
+    write parallelism and file size.
 
-    CAVEAT (ADVICE r15): ``distribute=True`` also CAPS the write
-    stage at ``num_buckets`` tasks — at 8 buckets a large one-shot
-    build serializes its parquet encoding onto 8 cores. For the
-    index-sized stores here that is the right trade (file count and
-    commit overhead dominate); for a large one-shot build raise
-    ``num_buckets`` (more write parallelism AND more files, the same
-    knob) or pass ``distribute=False`` and accept per-(partition x
-    bucket) files. The one-file-per-bucket claim rests on
-    ``repartition``'s HashPartitioning and the bucket spec sharing
-    the pmod(Murmur3) hash family — pinned by the file-count test
-    (tests/test_bucketed.py), which breaks loudly if either side's
-    hashing ever diverges.
+    ``mode="append"`` first completes any compaction publish a
+    crashed process left half-swapped, so an append never lands on
+    a table with missing rows; ``recover=False`` skips that check
+    for callers that ran it on this table this batch already.
     """
     if mode == "append" and recover:
         spark = df.sparkSession
         if spark.catalog.tableExists(table_name):
-            # Never append onto a half-swapped table: complete any
-            # compaction publish a previous process crashed in (r11
-            # self-review #3 — recovery deletes exactly the marker's
-            # original list, so files appended AFTER recovery are
-            # safe, but an append BEFORE recovery would read/write
-            # against missing rows). No-op cost: one catalog lookup
-            # + one fs.exists; ``recover=False`` skips it for
-            # callers that ran recovery on this table this batch
-            # already (the streaming loops' pre-check).
             from pudl_spark.operators.layout import (
                 recover_pending_compaction,
             )
 
             recover_pending_compaction(spark, table_name)
-    if distribute:
-        df = df.repartition(num_buckets, *bucket_cols)
+    df = df.repartition(num_buckets, *bucket_cols)
     writer = df.write.mode(mode).format("parquet") \
         .bucketBy(num_buckets, *bucket_cols)
     writer = writer.sortBy(*(sort_cols or bucket_cols))

@@ -521,11 +521,12 @@ def ivf_ingest_stream(stream_vecs: DataFrame, table_name: str,
     pruned candidate fetch, cell-pruned idempotent append guard).
 
     Crash recovery mirrors the LSH loop: per-batch partitions under
-    per-write dynamic overwrite; `append_to_ivf_store_idempotent`
-    converges redelivered appends (the guard reads only the batch's
-    own assigned cells — deterministic across redeliveries — never
-    the corpus); fully-redelivered batches are detected by the same
-    cell-pruned id lookup and skipped, leaving their matches
+    per-write dynamic overwrite; the batch appends only the rows that
+    `antijoin_store_ids` (the guard `append_to_ivf_store_idempotent`
+    runs) finds new, so redelivered appends converge (the guard reads
+    only the batch's own assigned cells — deterministic across
+    redeliveries — never the corpus); fully-redelivered batches are
+    detected by the same lookup and skipped, leaving their matches
     partition intact. The FIRST batch bootstraps via
     `build_ivf_store` (gated on BOTH store tables existing — the
     build's writes are concurrent — so a bootstrap crash that left
@@ -541,8 +542,8 @@ def ivf_ingest_stream(stream_vecs: DataFrame, table_name: str,
     file count. Returns the started StreamingQuery (availableNow).
     """
     from pudl_spark.functions.similarity import (
-        append_to_ivf_store_idempotent, build_ivf_store,
-        ivf_store_topk,
+        _append_store_rows, _assign_to_store_cells, antijoin_store_ids,
+        build_ivf_store, ivf_store_topk,
     )
 
     def _probe_then_ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -586,12 +587,7 @@ def ivf_ingest_stream(stream_vecs: DataFrame, table_name: str,
         # Fully-redelivered batch: every vec_id already in the store
         # (checked cell-pruned, O(batch cells' members)) -> skip.
         # `antijoin_store_ids` is the SAME guard block the idempotent
-        # append uses (r11 review: a hand-copy here could silently
-        # diverge from the append's regime gate).
-        from pudl_spark.functions.similarity import (
-            _assign_to_store_cells, antijoin_store_ids,
-        )
-
+        # append uses.
         rows = _assign_to_store_cells(spark, table_name, batch,
                                       nprobe, centroid_factor
                                       ).localCheckpoint()
@@ -615,18 +611,10 @@ def ivf_ingest_stream(stream_vecs: DataFrame, table_name: str,
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("batch_id")
          .parquet(matches_path))
-        # fresh already carries its (cell, vec_id, embedding, nrm)
-        # assignment and is id-guarded: hand it to the shared append
-        # with the repeat work switched off (assign/guard/assert run
-        # once per batch total).
-        append_to_ivf_store_idempotent(spark, table_name,
-                                       num_buckets=num_buckets,
-                                       nprobe=nprobe,
-                                       centroid_factor=centroid_factor,
-                                       assigned_rows=fresh,
-                                       guard=False,
-                                       assert_params=False,
-                                       recover=False)
+        # fresh is assigned and id-guarded, and recovery ran above:
+        # the append is the bare bucketed write.
+        _append_store_rows(fresh, table_name, num_buckets,
+                           recover=False)
         # Periodic bucket-aware compaction, same contract as the LSH
         # loop (the seeds sidecar never grows on append — only the
         # store table needs it).

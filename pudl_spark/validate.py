@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from pudl_spark.schema.enforce import fk_orphan_rows
 from pudl_spark.sql import ident, lit
 
 
@@ -171,18 +172,10 @@ def check_one2one_mapping(df: DataFrame, col_a: str,
 def check_foreign_key_df(child: DataFrame, child_cols: list[str],
                          parent: DataFrame,
                          parent_cols: list[str]) -> DataFrame:
-    """FK orphans as a violations frame (ref: foreign_key.sql; the
-    count form lives in schema.enforce.check_foreign_key).
+    """FK orphans as a violations frame of distinct orphan keys (ref:
+    foreign_key.sql; the count form is schema.enforce.check_foreign_key).
     """
-    parent_keys = parent.select(
-        *[F.col(p).alias(c) for c, p in zip(child_cols, parent_cols)]
-    ).dropDuplicates()
-    pred = None
-    for c in child_cols:
-        cond = F.col(c).isNotNull()
-        pred = cond if pred is None else (pred & cond)
-    return (child.filter(pred)
-            .join(F.broadcast(parent_keys), on=child_cols, how="left_anti")
+    return (fk_orphan_rows(child, child_cols, parent, parent_cols)
             .select(*child_cols).dropDuplicates())
 
 

@@ -91,7 +91,7 @@ def test_compaction_restores_file_bound_and_probe_contracts(spark):
             got_p = sorted(map(tuple, pruned.collect()))
             got_f = sorted(map(tuple, lsh_store_probe(
                 spark, "t_cmp", batch, "doc_id", "text",
-                jaccard_threshold=0.5, prune_scan=False).collect()))
+                jaccard_threshold=0.5, max_prune_values=0).collect()))
             assert got_p == got_f == before
             # (a) the bucketed-join contract survives: store-vs-store
             # band join plans with NO Exchange after the rewrite.

@@ -93,7 +93,7 @@ def test_ivf_store_probe_reads_sidecar_not_corpus(spark):
             # localCheckpoint.
             unpruned = ivf_store_topk(spark, "t_ivf_sidecar", queries,
                                       k=10, seed_probe=3,
-                                      prune_scan=False)
+                                      max_prune_values=0)
             uplan = (unpruned._jdf.queryExecution().executedPlan()
                      .toString())
             assert "t_ivf_sidecar_seeds" in uplan, uplan

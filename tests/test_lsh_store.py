@@ -127,7 +127,7 @@ def test_probe_prunes_store_scans(spark):
             got = sorted(map(tuple, out.collect()))
             ref = sorted(map(tuple, lsh_store_probe(
                 spark, "t_lsh3", batch, "doc_id", "text",
-                jaccard_threshold=0.5, prune_scan=False).collect()))
+                jaccard_threshold=0.5, max_prune_values=0).collect()))
             assert got == ref and got
         finally:
             for t in ("t_lsh3_bands", "t_lsh3_sets"):

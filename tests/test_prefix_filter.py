@@ -122,80 +122,6 @@ def test_float_ceil_overshoot_cannot_drop_pairs(spark):
     assert got == {(1, 2): 14 / 25}
 
 
-def test_suffix_filter_prunes_but_preserves_output(spark, monkeypatch):
-    """PPJoin+ depth-1 suffix filter (VERDICT r8 stretch #7): on a
-    pair built to pass the length + positional filters but fail the
-    suffix Hamming bound, the verify set shrinks while the verified
-    output stays identical (completeness intact)."""
-    import pudl_spark.functions.dedup as D
-
-    # a: exactly 20 shingles (19 doc-unique + one shared trailing
-    # trigram), b: exactly 10 (9 unique + shared). Fillers repeat
-    # each doc's words up to "s1 s2" so every NON-shared shingle has
-    # df=3 while the shared trigram has df=2 — the rarest token,
-    # hence position 1 of both prefixes. At t=0.5 the required
-    # overlap is 30/3 = 10: the positional bound 1 + min(19, 9) = 10
-    # passes exactly, but any partition of the 19-token suffix
-    # against the 9-token suffix forces H >= 19 - 9 + 1 = 11, so the
-    # suffix overlap ceiling 1 + (28-11)/2 = 9.5 < 10 prunes the
-    # pair BEFORE the verify, whatever the shingle hash order.
-    xs = " ".join(f"x{i}" for i in range(19))   # 19 unique words
-    ys = " ".join(f"y{i}" for i in range(9))
-    docs = [(1, xs + " s1 s2 s3"), (2, ys + " s1 s2 s3"),
-            (11, xs + " s1 s2"), (12, xs + " s1 s2"),
-            (21, ys + " s1 s2"), (22, ys + " s1 s2")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    counts = {}
-    orig = D.verified_jaccard_pairs
-
-    def spy_factory(key):
-        def spy(cand, *a, **k):
-            counts[key] = cand.count()
-            return orig(cand, *a, **k)
-        return spy
-
-    monkeypatch.setattr(D, "verified_jaccard_pairs",
-                        spy_factory("on"))
-    got_on = sorted(map(tuple, D.prefix_filter_pairs(
-        df, "doc_id", "text", jaccard_threshold=0.5,
-        suffix_filter=True).collect()))
-    monkeypatch.setattr(D, "verified_jaccard_pairs",
-                        spy_factory("off"))
-    got_off = sorted(map(tuple, D.prefix_filter_pairs(
-        df, "doc_id", "text", jaccard_threshold=0.5,
-        suffix_filter=False).collect()))
-    assert got_on == got_off          # completeness + precision
-    assert counts["on"] < counts["off"], counts  # it really pruned
-    want = _brute_pairs(docs, t=0.5)
-    got = {(a, b): j for a, b, j in got_on}
-    assert set(got) == set(want)
-
-
-@given(seed=st.integers(min_value=0, max_value=2**31 - 1),
-       t=st.sampled_from([0.4, 0.56, 0.7, 0.9]))
-@settings(max_examples=4, deadline=None)
-def test_property_suffix_filter_never_drops_pairs(seed, t, spark):
-    """The suffix filter's own fuzz: suffix-on output == suffix-off
-    output == brute force on random small-vocab corpora, including a
-    ceil-overshoot-prone threshold (0.56)."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    vocab = ["a", "b", "c", "d", "e", "f"]
-    docs = [(i, " ".join(rng.choice(vocab, size=rng.integers(3, 14))))
-            for i in range(14)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got_on = {(r["id_a"], r["id_b"]): r["jaccard"]
-              for r in prefix_filter_pairs(
-                  df, "doc_id", "text", jaccard_threshold=t,
-                  suffix_filter=True).collect()}
-    want = _brute_pairs(docs, t=t)
-    assert set(got_on) == set(want)
-    for p, j in want.items():
-        assert abs(got_on[p] - j) < 1e-12
-
-
 def test_weighted_rendezvous_share_and_movement(spark):
     from pudl_spark.plans.queries import QUERIES
 
@@ -224,33 +150,12 @@ def test_weighted_rendezvous_share_and_movement(spark):
     assert abs(moved - 5 / 15) < 0.08, moved
 
 
-def test_broadcast_freq_same_output_and_broadcast_plan(spark):
-    """ADVICE r8: bounded-vocab callers can broadcast the token
-    frequency table — the output is unchanged and the freq join side
-    plans as a broadcast (no __tok shuffle to skew)."""
-    docs = [(i, " ".join(f"w{(i + j) % 9}" for j in range(8)))
-            for i in range(12)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got_b = prefix_filter_pairs(df, "doc_id", "text",
-                                jaccard_threshold=0.5,
-                                broadcast_freq=True)
-    plan = got_b._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    got = sorted(map(tuple, got_b.collect()))
-    want = sorted(map(tuple, prefix_filter_pairs(
-        df, "doc_id", "text", jaccard_threshold=0.5).collect()))
-    assert got == want and got
-
-
 def test_prefix_filter_single_text_pass(spark):
-    """Structural pin for the r13 single-text-pass swap (the same
-    cure the r12 minhash-miner swap applied): with the default
-    checkpoint_sets=True, the FINAL plan must read only the
-    checkpointed sets blocks — no parquet/file relation means the
-    text shingles exactly once, at the checkpoint materialization.
-    Pinned on optimized-logical-plan NODE CLASSES (LogicalRelation /
-    LogicalRDD), not explain-string substrings (ADVICE r12), and
-    the checkpoint-free fallback must keep the file scan."""
+    """Structural pin for the single text pass: the FINAL plan must
+    read only the checkpointed sets blocks — no parquet/file relation
+    means the text shingles exactly once, at the checkpoint
+    materialization. Pinned on optimized-logical-plan NODE CLASSES
+    (LogicalRelation / LogicalRDD), not explain-string substrings."""
     from pudl_spark.catalog import read_parquet_table
     from pudl_spark.functions.dedup import prefix_filter_pairs
 
@@ -264,12 +169,3 @@ def test_prefix_filter_single_text_pass(spark):
     classes = optimized_plan_classes(out)
     assert "LogicalRelation" not in classes, classes
     assert "LogicalRDD" in classes, classes
-
-    live = prefix_filter_pairs(d, "doc_id", "text",
-                               jaccard_threshold=0.5,
-                               checkpoint_sets=False)
-    classes = optimized_plan_classes(live)
-    assert "LogicalRelation" in classes, classes
-    # and the two paths agree row-for-row
-    assert (sorted(map(tuple, out.collect()))
-            == sorted(map(tuple, live.collect())))

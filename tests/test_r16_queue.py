@@ -1,6 +1,6 @@
 """Byte-identity and regression pins for the LSH store and sampler
 paths: the frozen cross-split oracle strings, the bands-from-sets
-derivation against the live text-shingling path, the single-pass
+derivation against frozen band keys, the single-pass
 `build_lsh_store` against frozen store fingerprints, the unified
 samplers against a brute-force reference, and the profiling tool's
 watched-movers selection."""
@@ -35,24 +35,28 @@ def test_cross_split_oracle_defaults_unchanged():
 
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001", SF])
 def test_oph_banded_from_sets_byte_identical(spark, sf):
-    """The staged bands-from-sets derivation must equal the live
-    text-shingling path row-for-row (VERDICT r9 #6): since r12 this
-    derivation IS `minhash_candidate_pairs`' bands stage (the
-    single-text-pass swap), so this doubles as the correctness pin
-    for the live miner and — since the r15 build swap — for the
-    bands stage of `build_lsh_store` itself (which now derives its
-    bands table from the just-written sets table)."""
-    from pudl_spark.functions.dedup import (
-        oph_banded, oph_banded_from_sets, shingle_hash_sets,
-    )
-    from pudl_spark.catalog import read_parquet_table
+    """`oph_banded_from_sets` over `shingle_hash_sets` must reproduce,
+    row for row, the band keys of the text-shingling banding path it
+    replaced, frozen in tests/golden/oph_band_keys.json. These band
+    keys feed the pair miner, the store build and append, and the
+    probe, so this pins all four."""
+    import hashlib
+    import json
 
+    from pudl_spark.catalog import read_parquet_table
+    from pudl_spark.functions.dedup import (
+        oph_banded_from_sets, shingle_hash_sets,
+    )
+
+    with open(os.path.join(REPO, "tests", "golden",
+                           "oph_band_keys.json")) as f:
+        want = json.load(f)[os.path.basename(sf)]
     d = read_parquet_table(spark, f"{sf}/documents.parquet")
-    live = sorted(map(tuple,
-                      oph_banded(d, "doc_id", "text").collect()))
-    staged = sorted(map(tuple, oph_banded_from_sets(
+    rows = sorted(map(tuple, oph_banded_from_sets(
         shingle_hash_sets(d, "doc_id", "text")).collect()))
-    assert staged == live and staged
+    assert {"rows": len(rows),
+            "sha256": hashlib.sha256(repr(rows).encode()).hexdigest()
+            } == want
 
 
 def test_unified_samplers_match_brute_force(spark):
