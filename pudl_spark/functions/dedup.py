@@ -79,13 +79,10 @@ def oph_banded_from_sets(sets_df: DataFrame, num_hashes: int = 64,
     expression rather than Column-DSL lambdas, which cost hundreds
     of py4j round trips per call for the same Catalyst tree.
 
-    ``checkpoint`` pins the signatures with a lazy localCheckpoint
-    before the band explode, so the pair miner's self-join reads
-    them once instead of recomputing them per side; the blocks are
-    owned by the RDD, so the ContextCleaner reclaims them with the
-    frame (persist() would leak until an unpersist a lazily returned
-    frame can never schedule). Single-consumer callers (the store
-    writes and the probe) pass False.
+    ``checkpoint`` pins the signatures (reuse pin) for the pair
+    miner's self-join (minhash_near_dup_pairs 2.28 s unpinned vs
+    1.53 s at sf0.1); single-consumer callers (the store writes,
+    appends and the probe) pass False.
     """
     nb = F.lit(num_hashes)
     exploded = sets_df.select(
@@ -453,7 +450,6 @@ def append_to_lsh_store_idempotent(
         num_hashes: int = 64, bands: int = 16, shingle_k: int = 3,
         num_buckets: int = 8, max_prune_values: int = 2048,
         guard_tables: tuple = ("_bands", "_sets"),
-        checkpoint: bool = True,
         prune_ids: list | None = None,
         recover: bool = True) -> None:
     """Redelivery-safe LSH store append — the exactly-once variant a
@@ -475,19 +471,17 @@ def append_to_lsh_store_idempotent(
     O(batch), not O(corpus). Build parameters are asserted like the
     plain append.
 
-    ``guard_tables``/``checkpoint``/``prune_ids``/``recover``: a
+    ``guard_tables``/``prune_ids``/``recover``: a
     caller that already anti-joined the batch against one of the
     index tables (the streaming loop pre-filters against ``_sets``
     to detect fully-redelivered batches) passes the remaining
-    table(s), ``checkpoint=False`` for an already-checkpointed
-    batch, its already-collected id list — any SUPERSET of the
+    table(s), its already-collected id list — any SUPERSET of the
     batch's ids is valid for the guard's In() prune, since a
     superset filter cannot change an anti-join result — and
     ``recover=False`` when it ran the compaction-swap recovery
     check on both tables this batch already, so the per-micro-batch
-    hot path never repeats a guard scan, an id collect, a batch
-    materialization, or a recovery catalog round-trip (r11
-    self-review).
+    hot path never repeats a guard scan, an id collect, or a
+    recovery catalog round-trip.
     """
     from pudl_spark.sources.files import (
         assert_build_params_match, write_bucketed_table,
@@ -498,9 +492,8 @@ def append_to_lsh_store_idempotent(
         {"num_hashes": num_hashes, "bands": bands,
          "shingle_k": shingle_k, "num_buckets": num_buckets},
         "append_to_lsh_store_idempotent")
-    batch = new_docs.localCheckpoint() if checkpoint else new_docs
     ids = (prune_ids if prune_ids is not None
-           else [r[0] for r in batch.select(id_col).distinct()
+           else [r[0] for r in new_docs.select(id_col).distinct()
                  .limit(max_prune_values + 1).collect()])
     small = len(ids) <= max_prune_values
     # One text pass (r15, same shape as the plain append): the
@@ -508,7 +501,7 @@ def append_to_lsh_store_idempotent(
     # from the materialized rows. The per-table redelivery guards
     # below filter each table's OUTPUT rows, exactly as they
     # filtered the directly-banded rows before.
-    sets_rows = shingle_hash_sets(batch, id_col, text_col,
+    sets_rows = shingle_hash_sets(new_docs, id_col, text_col,
                                   shingle_k).localCheckpoint()
     # ORDER IS LOAD-BEARING (bands strictly before sets — do NOT
     # parallelize like the plain append, r16): the streaming loop's

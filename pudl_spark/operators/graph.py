@@ -21,16 +21,9 @@ def connected_components(edges: DataFrame, src: str = "src",
     """Label propagation + pointer jumping: returns (node, component)
     where component is the minimum node id reachable from node. Node
     ids must be orderable (int/string); labels are checkpointed every
-    round (constant-depth lineage at any graph size).
-
-    Fault-tolerance trade (ADVICE r15): the per-round pins are
-    ``localCheckpoint`` — executor-local blocks with NO lineage
-    fallback, so losing an executor mid-run aborts the job instead
-    of recomputing (acceptable for the minutes-long rounds here; the
-    blocks are label-table-sized, not corpus-sized). A multi-hour
-    run on a lossy/preemptible cluster should set a reliable
-    ``spark.sparkContext.setCheckpointDir`` and swap these for
-    ``checkpoint()`` — same algorithm, durable rounds.
+    round (constant-depth lineage at any graph size). The round pins
+    are executor-local blocks: on a preemptible cluster use
+    ``checkpoint()`` with a reliable checkpoint dir instead.
     """
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -44,22 +37,15 @@ def connected_components(edges: DataFrame, src: str = "src",
     # keep isolated-from-now-on nodes in the frame.
     sym = sym.union(
         sym.select(F.col("a"), F.col("a").alias("b")).distinct())
-    # The adjacency list joins against labels EVERY round; checkpoint
-    # it once so the union+distinct shuffle (and the upstream edge
-    # computation — often a window over the raw table) doesn't replay
-    # per iteration. LAZY (r15): the blocks materialize inside the
-    # first convergence-sum action below instead of paying a
-    # dedicated driver job per checkpoint — one action per round,
-    # not two (measured: event_sessions_cc 33 -> 30 driver jobs; the
-    # lineage's AQE stage jobs are unchanged, the fuse removes the
-    # per-round sum job — a scheduling round-trip per iteration on a
-    # real cluster).
+    # Reuse pin: every round joins the adjacency (event_sessions_cc
+    # 4.74 s unpinned vs 2.09 s pinned at sf0.1, 4 cores).
     sym = sym.localCheckpoint(eager=False)
     # Round 1 needs no label table at all: propagating the identity
     # labeling through the neighbor-min is just min(neighbor id), and
     # the self-loops guarantee every node appears. This removes the
     # init-distinct shuffle AND the first join — two fewer jobs,
     # which on small/mid graphs is a large share of the wall time.
+    # Lineage pin: the labels the rounds iterate from.
     labels = (
         sym.groupBy(F.col("a").alias("node"))
         .agg(F.min("b").alias("component"))
@@ -100,11 +86,8 @@ def connected_components(edges: DataFrame, src: str = "src",
             new.select(F.col("node").alias("component"),
                        F.col("component").alias("grand")).alias("g"),
             on="component", how="left")
-        # Lazy checkpoint (r15): the convergence check right below is
-        # the round's one action — it materializes the round's label
-        # blocks AND reads the sum in the same driver job, instead
-        # of an eager-checkpoint job set followed by a separate sum
-        # job. Next round's join then reads the materialized blocks.
+        # Lineage pin, lazy: the convergence sum below is the round's
+        # one action and materializes the blocks the next round reads.
         new = jumped.select(
             "node",
             F.least(F.col("component"),

@@ -6375,15 +6375,8 @@ def doc_tfidf_topk(spark, sf_dir):
             F.split(F.trim("text"), r"\s+"), lambda t: F.lower(t)))
         .alias("term"),
     ).filter(F.col("term") != "")
-    # UN-pinned (r16, reverting the r15 tf localCheckpoint): the pin
-    # cut the plan's documents scans 3 -> 1, but the tf table is
-    # (doc x term)-sized — materializing it into block storage costs
-    # MORE than re-running the parallel tokenize under the two extra
-    # consumers, measured at BOTH scales (same-session interleaved
-    # A/B: 0.86 vs 1.00 s at sf0.1, 1.36 vs 1.72 s at sf1). The
-    # scan-count win never became a wall or byte win because the
-    # "saved" upstream is map-side work over a table smaller than
-    # the pinned intermediate.
+    # Not pinned: the (doc x term) tf table costs more to materialize
+    # than the tokenize it would save (history in git).
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -7486,13 +7479,8 @@ def embedding_semantic_dedup(spark, sf_dir):
     # a NULL cluster_seed and default to is_kept=true (they were
     # never pair-checked, so nothing justified dropping them); the
     # null cluster never matches the self-join condition below.
-    # The assigned frame feeds BOTH self-join sides and the final
-    # projection; un-checkpointed, the IVF assignment (and the scan
-    # under it) re-executes at every appearance. Lazy localCheckpoint
-    # materializes it once — same-session A/B floors (r13): sf0.1
-    # 3.68 -> 2.86 s, 10x 7.32 -> 6.55 s, output byte-identical.
-    # Same caveat as the dedup miners: O(corpus) MEMORY_AND_DISK
-    # blocks that do not survive executor loss.
+    # Reuse pin: both self-join sides and the projection read the
+    # assignment (1.87 s unpinned vs 1.76 s pinned at sf0.1, 4 cores).
     assigned = emb.join(best, "vec_id", "left").localCheckpoint(
         eager=False)
     other = assigned.select(
@@ -9682,32 +9670,15 @@ def table_quality_screens(spark, sf_dir):
         check_weighted_quantile_constraints,
     )
 
-    # Scan sharing (r15, guide §6.1/§2.1 — the SCALE.md "production
-    # validation job" note made real): the eleven check branches used
-    # to scan lineitem SEVEN times, orders five and events twice in
-    # the one action. Each table now materializes ONCE as a pruned
-    # lazy localCheckpoint and every check branch reads the pinned
-    # blocks; the checks themselves are the same real validate.py
-    # functions over the same rows, so the eleven result rows are
-    # unchanged (oracle-verified).
+    # Each check reads its table directly: Catalyst prunes every scan
+    # to the columns its check needs. Pins on lineitem and orders were
+    # removed: same-host A/B read them within noise at sf0.1 and sf1.
     li = _t(spark, sf_dir, "lineitem").select(
         "l_quantity", "l_extendedprice", "l_returnflag",
-        "l_discount", "l_tax").localCheckpoint(eager=False)
-    # The orders pin is PRUNED to the three columns its four shared
-    # consumers read (r16, ADVICE r15 medium): the old full-width pin
-    # materialized the entire fact table into executor block storage
-    # — an O(table) footprint with no fault tolerance — just so the
-    # one check that truly reads every column (not-all-null) could
-    # share it. That check is a single streaming aggregate over one
-    # scan, so it now reads the parquet directly (columnar scan, one
-    # pass, nothing pinned) and the pin shrinks to date/custkey/
-    # priority; total parquet bytes read are unchanged (the pruned
-    # pin reads 3 columns, the direct scan reads the full width the
-    # full-width pin read anyway). Same rows, same eleven results.
+        "l_discount", "l_tax")
     orders_full = _t(spark, sf_dir, "orders")
     orders = orders_full.select(
-        "o_orderdate", "o_custkey",
-        "o_orderpriority").localCheckpoint(eager=False)
+        "o_orderdate", "o_custkey", "o_orderpriority")
     events = _t(spark, sf_dir, "events")
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")

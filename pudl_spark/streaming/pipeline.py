@@ -466,7 +466,7 @@ def lsh_ingest_stream(stream_docs: DataFrame, table_prefix: str,
         # fresh is already checkpointed and already sets-guarded —
         # only the bands guard remains (covers the crash window
         # between the two table appends), so the hot path pays one
-        # guard scan per table total, not two plus a re-checkpoint.
+        # guard scan per table total, not two.
         # `ids` (the whole batch's ids) is a valid SUPERSET prune
         # list for fresh's bands guard — a superset In() filter
         # cannot change an anti-join result — so the append never
@@ -476,7 +476,6 @@ def lsh_ingest_stream(stream_docs: DataFrame, table_prefix: str,
                                        num_buckets=num_buckets,
                                        max_prune_values=max_prune_values,
                                        guard_tables=("_bands",),
-                                       checkpoint=False,
                                        prune_ids=ids, recover=False,
                                        **sig)
         # Periodic bucket-aware compaction (``compact_every``): each

@@ -12,13 +12,13 @@ equality — the same discipline as plans/queries.py.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
+
+from tools.driver_sim import canon
 
 SF = "/root/testdata/sf0.001"
 
@@ -81,21 +81,6 @@ def duck():
     return con
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).astype("datetime64[us]")
-        elif pd.api.types.is_integer_dtype(df[c]):
-            df[c] = df[c].astype("Int64")
-        elif df[c].dtype == object:
-            df[c] = df[c].map(
-                lambda x: str(x) if x is not None and not (
-                    isinstance(x, float) and math.isnan(x)) else None)
-    return df.sort_values(by=list(df.columns), kind="mergesort",
-                          na_position="last").reset_index(drop=True)
-
-
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
@@ -114,7 +99,7 @@ def test_random_plans_match_duckdb(spark, duck, f_idx, g_idx, a_idx):
         df = df.filter(FILTERS[i][1]())
     gcols = [GROUPS[i][1]() for i in g_idx]
     aggs = [AGGS[i][1]() for i in a_idx]
-    got = _canon(df.groupBy(*gcols).agg(*aggs).toPandas())
+    got = canon(df.groupBy(*gcols).agg(*aggs).toPandas())
 
     where = " AND ".join(FILTERS[i][2] for i in f_idx) or "TRUE"
     gsel = ", ".join(GROUPS[i][2] for i in g_idx)
@@ -122,7 +107,7 @@ def test_random_plans_match_duckdb(spark, duck, f_idx, g_idx, a_idx):
     asel = ", ".join(AGGS[i][2] for i in a_idx)
     sql = (f"SELECT {gsel}, {asel} FROM orders "
            f"WHERE {where} GROUP BY {gkey}")
-    want = _canon(duck.execute(sql).df())
+    want = canon(duck.execute(sql).df())
 
     assert list(got.columns) == list(want.columns)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
@@ -175,7 +160,7 @@ def test_random_join_plans_match_duckdb(spark, duck, f_idx, g_idx,
     j = o.join(c, o.o_custkey == c.c_custkey, how)
     gcols = [JOIN_GROUPS[i][0] for i in g_idx]
     aggs = [JOIN_AGGS[i][1]() for i in a_idx]
-    got = _canon(j.groupBy(*gcols).agg(*aggs).toPandas())
+    got = canon(j.groupBy(*gcols).agg(*aggs).toPandas())
 
     where = " AND ".join(FILTERS[i][2] for i in f_idx) or "TRUE"
     gsel = ", ".join(JOIN_GROUPS[i][1] for i in g_idx)
@@ -185,7 +170,7 @@ def test_random_join_plans_match_duckdb(spark, duck, f_idx, g_idx,
            f"(SELECT * FROM orders WHERE {where}) o "
            f"{sqljoin} customer c ON o.o_custkey = c.c_custkey "
            f"GROUP BY {gsel}")
-    want = _canon(duck.execute(sql).df())
+    want = canon(duck.execute(sql).df())
     assert list(got.columns) == list(want.columns)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
@@ -239,13 +224,13 @@ def test_random_window_plans_match_duckdb(spark, duck, p_idx, w_idx,
     part = WIN_PARTS[p_idx][0]
     w = Window.partitionBy(part).orderBy("o_orderdate", "o_orderkey")
     exprs = [WIN_FUNCS[i][1](w) for i in w_idx]
-    got = _canon(df.select(F.col("o_orderkey"), *exprs).toPandas())
+    got = canon(df.select(F.col("o_orderkey"), *exprs).toPandas())
 
     over = (f"PARTITION BY {part} ORDER BY o_orderdate, o_orderkey")
     wsel = ", ".join(WIN_FUNCS[i][2].format(over) for i in w_idx)
     where = " AND ".join(FILTERS[i][2] for i in f_idx) or "TRUE"
     sql = f"SELECT o_orderkey, {wsel} FROM orders WHERE {where}"
-    want = _canon(duck.execute(sql).df())
+    want = canon(duck.execute(sql).df())
     assert list(got.columns) == list(want.columns)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
@@ -282,9 +267,9 @@ def test_random_set_ops_match_duckdb(spark, duck, fa, fb, op):
         return d.select(*proj)
 
     name, fn, sqlop = SETOPS[op]
-    got = _canon(fn(side(fa), side(fb))
-                 .groupBy(*proj)
-                 .agg(F.count(F.lit(1)).alias("n")).toPandas())
+    got = canon(fn(side(fa), side(fb))
+                .groupBy(*proj)
+                .agg(F.count(F.lit(1)).alias("n")).toPandas())
 
     def sql_side(f_idx):
         where = " AND ".join(FILTERS[i][2] for i in f_idx) or "TRUE"
@@ -293,6 +278,6 @@ def test_random_set_ops_match_duckdb(spark, duck, fa, fb, op):
     sql = (f"SELECT {', '.join(proj)}, count(*) AS n FROM "
            f"({sql_side(fa)} {sqlop} {sql_side(fb)}) t "
            f"GROUP BY {', '.join(proj)}")
-    want = _canon(duck.execute(sql).df())
+    want = canon(duck.execute(sql).df())
     assert list(got.columns) == list(want.columns)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)

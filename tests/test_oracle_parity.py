@@ -2,21 +2,21 @@
 
 Runs every queries() entry on Spark at sf0.01 and its oracle_sql() in
 DuckDB over the same parquet, then compares row count, column names and
-values (exact for ints/strings/timestamps; exact bitwise for floats —
-the whole point of the decimal-routing discipline in plans/queries.py).
+values with `tools/driver_sim.compare` (exact for ints/strings/
+timestamps; exact bitwise for floats — the whole point of the
+decimal-routing discipline in plans/queries.py).
 """
 
 from __future__ import annotations
 
 import glob
-import math
 import os
 
 import duckdb
-import pandas as pd
 import pytest
 
 from pudl_spark.plans.queries import ORACLES, QUERIES
+from tools.driver_sim import compare
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
                                "/root/testdata/sf0.01")
@@ -33,47 +33,9 @@ def duck():
     return con
 
 
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).astype("datetime64[us]")
-        elif pd.api.types.is_integer_dtype(df[c]):
-            df[c] = df[c].astype("Int64")
-        elif df[c].dtype == object:
-            df[c] = df[c].map(
-                lambda x: str(x) if x is not None and not (
-                    isinstance(x, float) and math.isnan(x)) else None)
-    return df.sort_values(by=list(df.columns), kind="mergesort",
-                          na_position="last").reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_parity(name, spark, duck):
     sdf = QUERIES[name](spark, ORACLE_SF_DIR).toPandas()
     odf = duck.execute(ORACLES[name]).df()
-    assert sorted(sdf.columns) == sorted(odf.columns), (
-        f"{name}: columns {sorted(sdf.columns)} != {sorted(odf.columns)}")
-    assert len(sdf) == len(odf), (
-        f"{name}: row count {len(sdf)} != {len(odf)}")
-    s, o = canon(sdf), canon(odf)
-    for c in s.columns:
-        sv, ov = s[c], o[c]
-        if pd.api.types.is_float_dtype(sv) or pd.api.types.is_float_dtype(ov):
-            sv = sv.astype(float)
-            ov = ov.astype(float)
-            both_nan = sv.isna() & ov.isna()
-            exact = (sv == ov) | both_nan
-            if not exact.all():
-                bad = (~exact)
-                diff = (sv[bad] - ov[bad]).abs().max()
-                raise AssertionError(
-                    f"{name}.{c}: {bad.sum()} float mismatches, "
-                    f"max abs diff {diff}; sample spark={sv[bad].head(3).tolist()} "
-                    f"oracle={ov[bad].head(3).tolist()}")
-        else:
-            eq = (sv == ov) | (sv.isna() & ov.isna())
-            assert eq.all(), (
-                f"{name}.{c}: {(~eq).sum()} mismatches; "
-                f"sample spark={sv[~eq].head(3).tolist()} "
-                f"oracle={ov[~eq].head(3).tolist()}")
+    err = compare(name, sdf, odf)
+    assert err is None, err

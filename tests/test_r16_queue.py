@@ -1,6 +1,5 @@
 """Byte-identity and regression pins for the LSH store and sampler
-paths: the frozen cross-split oracle strings, the bands-from-sets
-derivation against frozen band keys, the single-pass
+paths: the frozen cross-split oracle strings, the single-pass
 `build_lsh_store` against frozen store fingerprints, the unified
 samplers against a brute-force reference, and the profiling tool's
 watched-movers selection."""
@@ -31,32 +30,6 @@ def test_cross_split_oracle_defaults_unchanged():
         got = hashlib.sha256(
             _lsh_cross_split_sql(mod).encode()).hexdigest()
         assert got == want, mod
-
-
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001", SF])
-def test_oph_banded_from_sets_byte_identical(spark, sf):
-    """`oph_banded_from_sets` over `shingle_hash_sets` must reproduce,
-    row for row, the band keys of the text-shingling banding path it
-    replaced, frozen in tests/golden/oph_band_keys.json. These band
-    keys feed the pair miner, the store build and append, and the
-    probe, so this pins all four."""
-    import hashlib
-    import json
-
-    from pudl_spark.catalog import read_parquet_table
-    from pudl_spark.functions.dedup import (
-        oph_banded_from_sets, shingle_hash_sets,
-    )
-
-    with open(os.path.join(REPO, "tests", "golden",
-                           "oph_band_keys.json")) as f:
-        want = json.load(f)[os.path.basename(sf)]
-    d = read_parquet_table(spark, f"{sf}/documents.parquet")
-    rows = sorted(map(tuple, oph_banded_from_sets(
-        shingle_hash_sets(d, "doc_id", "text")).collect()))
-    assert {"rows": len(rows),
-            "sha256": hashlib.sha256(repr(rows).encode()).hexdigest()
-            } == want
 
 
 def test_unified_samplers_match_brute_force(spark):
@@ -140,8 +113,11 @@ def test_singlepass_build_store_matches_frozen_fingerprint(
     tables byte-equal to the pre-swap two-pass build — pinned
     against sha256 fingerprints of the sorted collected rows,
     frozen from the two-pass build at r15 landing time, at two SFs.
-    The persisted build params the probes/appends assert against
-    are checked too."""
+    The bands table is `oph_banded_from_sets` over the written
+    `shingle_hash_sets` rows, and these band keys feed the pair
+    miner, the store append and the probe, so its fingerprint pins
+    all of them. The persisted build params the probes/appends
+    assert against are checked too."""
     import hashlib
     import os
     import tempfile

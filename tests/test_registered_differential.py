@@ -5,24 +5,14 @@ driver's end-of-round sweep to learn a new query diverges."""
 
 from __future__ import annotations
 
-import importlib.util
-import os
-
 import duckdb
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tools.driver_sim import compare
+
 SF = "/root/testdata/sf0.01"
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
-
-
-def _driver_sim():
-    spec = importlib.util.spec_from_file_location(
-        "driver_sim", os.path.join(REPO, "tools", "driver_sim.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.mark.parametrize("name", ["doc_lsh_store_ingest",
@@ -30,7 +20,6 @@ def _driver_sim():
 def test_new_registered_query_matches_oracle(spark, name):
     from pudl_spark.plans.queries import ORACLES, QUERIES
 
-    ds = _driver_sim()
     sdf = QUERIES[name](spark, SF).toPandas()
     con = duckdb.connect()
     for t in TABLES:
@@ -38,5 +27,5 @@ def test_new_registered_query_matches_oracle(spark, name):
                     f"read_parquet('{SF}/{t}.parquet')")
     odf = con.execute(ORACLES[name]).df()
     assert len(sdf) > 0
-    err = ds.compare(name, sdf, odf)
+    err = compare(name, sdf, odf)
     assert err is None, err

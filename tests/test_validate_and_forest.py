@@ -546,47 +546,38 @@ def test_subcomponents_sum_to_total(spark):
 
 
 def test_table_quality_screens_plan_pruning(spark):
-    """Column-pruning + scan-sharing pin for the registered composite
-    (r14 pruning pin, reshaped r15): at 100 TB the composite's cost is
-    scan bytes, so each source table must be read ONCE, pruned to
-    exactly the columns its checks need. Since r15 the query pins one
-    pruned lazy localCheckpoint per table and all eleven branches read
-    the pinned blocks, so the pruning contract lives on the
-    checkpointed schemas (plan_utils.rdd_scan_schemas): lineitem is
-    the five check columns, events collapses to the nulled value
-    column, and the orders pin is the THREE columns its four shared
-    consumers read (r16, ADVICE r15 medium — the old full-width
-    orders pin put an O(table) footprint in executor storage so the
-    one genuinely full-width check could share it). The not-all-null
-    check now reads the parquet directly: one full-width streaming
-    file scan, nothing pinned. Remaining file scans are that one
-    orders pass plus the two single-column dimension reads."""
+    """Column-pruning pin for the registered composite: at 100 TB the
+    composite's cost is scan bytes, so every file scan must be pruned
+    to the columns its check needs. Lineitem scans read at most the
+    five check columns; orders scans read at most the three shared
+    columns (date, custkey, priority), except not-all-null's one
+    full-width pass; the only other files are the single-column
+    dimension reads. The events pin carries only the nulled value
+    column."""
     from plan_utils import file_scan_schemas, rdd_scan_schemas
 
     from pudl_spark.plans.queries import QUERIES
 
     df = QUERIES["table_quality_screens"](spark,
                                           "/root/testdata/sf0.001")
-    pinned = rdd_scan_schemas(df)
-    assert ("l_discount", "l_extendedprice", "l_quantity",
-            "l_returnflag", "l_tax") in pinned, pinned
-    assert ("value",) in pinned, pinned
-    orders_pin = [s for s in pinned if "o_orderdate" in s]
-    assert orders_pin == [("o_custkey", "o_orderdate",
-                           "o_orderpriority")], pinned
-    # fact tables are not otherwise rescanned as files: the only
-    # parquet scans are not-all-null's one full-width orders pass
-    # and the single-column dimension reads
-    seen_orders = 0
+    assert ("value",) in rdd_scan_schemas(df)
+    li_cols = {"l_discount", "l_extendedprice", "l_quantity",
+               "l_returnflag", "l_tax"}
+    shared = {"o_custkey", "o_orderdate", "o_orderpriority"}
+    full_orders = 0
     for table, cols in file_scan_schemas(df):
-        if table.startswith("orders"):
-            seen_orders += 1
-            assert "o_orderkey" in cols and len(cols) > 3, (
-                table, cols)  # full width
+        if table.startswith("lineitem"):
+            assert set(cols) <= li_cols, (table, cols)
+        elif table.startswith("orders"):
+            if "o_orderkey" in cols:
+                full_orders += 1
+                assert len(cols) > 3, (table, cols)  # full width
+            else:
+                assert set(cols) <= shared, (table, cols)
         else:
             assert table.startswith(("nation", "region")), (table, cols)
             assert len(cols) <= 1, (table, cols)
-    assert seen_orders == 1
+    assert full_orders == 1
 
 
 def test_consistent_years(spark):

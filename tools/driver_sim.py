@@ -3,10 +3,13 @@
 The round-1 failure mode was conf drift between the builder's session
 (pudl_spark.session.get_spark) and the driver's plain SparkSession.
 This script runs every queries() entry at sf0.01 under a session with
-NO pudl_spark confs and compares against oracle_sql() in DuckDB, using
-the same column-sorted value comparison as tests/test_oracle_parity.py.
+NO pudl_spark confs and compares against oracle_sql() in DuckDB.
+``canon`` and ``compare`` are the one oracle comparator: the tests
+(tests/test_oracle_parity.py, tests/test_differential_fuzz.py,
+tests/test_registered_differential.py) import them from here.
 
 Usage: python tools/driver_sim.py [name ...]
+The master is local[$SPARK_GRAFT_CPUS] (default 32), as in get_spark.
 """
 
 from __future__ import annotations
@@ -27,6 +30,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
+    """Columns sorted by name, rows sorted by every column, ints as
+    nullable Int64, timestamps at microseconds, objects as strings
+    (None and NaN both become None)."""
     df = df.reindex(sorted(df.columns), axis=1)
     for c in df.columns:
         if pd.api.types.is_datetime64_any_dtype(df[c]):
@@ -42,27 +48,29 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> str | None:
+    """None when the frames hold the same columns and rows, else what
+    differs. Floats compare exactly; NaN equals NaN, null equals null."""
     if sorted(sdf.columns) != sorted(odf.columns):
-        return f"columns {sorted(sdf.columns)} != {sorted(odf.columns)}"
+        return (f"{name}: columns {sorted(sdf.columns)} != "
+                f"{sorted(odf.columns)}")
     if len(sdf) != len(odf):
-        return f"rows {len(sdf)} != {len(odf)}"
+        return f"{name}: rows {len(sdf)} != {len(odf)}"
     s, o = canon(sdf), canon(odf)
     for c in s.columns:
         sv, ov = s[c], o[c]
         if pd.api.types.is_float_dtype(sv) or pd.api.types.is_float_dtype(ov):
             sv, ov = sv.astype(float), ov.astype(float)
-            eq = (sv == ov) | (sv.isna() & ov.isna())
-        else:
-            eq = (sv == ov) | (sv.isna() & ov.isna())
+        eq = (sv == ov) | (sv.isna() & ov.isna())
         if not eq.all():
-            return (f"{c}: {(~eq).sum()} mismatches; "
+            return (f"{name}.{c}: {(~eq).sum()} mismatches; "
                     f"spark={sv[~eq].head(3).tolist()} "
                     f"oracle={ov[~eq].head(3).tolist()}")
     return None
 
 
 def main() -> int:
-    spark = (SparkSession.builder.master("local[32]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
              .appName("driver_sim")
              .config("spark.driver.memory", "10g")
              .config("spark.ui.enabled", "false")
@@ -103,7 +111,7 @@ def main() -> int:
             continue
         msg = compare(name, sdf, odf)
         if msg:
-            print(f"FAIL {name}: {msg}")
+            print(f"FAIL {msg}")
             n_fail += 1
         else:
             n_pass += 1

@@ -1,35 +1,40 @@
-"""Scale-stress harness: does each operator family scale ~linearly?
+"""Scale-stress harness: scaled corpora and the store/append stress modes.
 
-Synthesizes a ~10x copy of the sf0.1 testdata (id-shifted unions, so
-key structure and per-user/per-doc locality are preserved while user,
-document and order cardinalities genuinely grow), then times a
-representative query per family at sf0.1 and at 10x. A plan that
-hides an all-pairs join, a driver collect, or a lineage blow-up shows
-up as super-linear wall time here long before a cluster run would.
+`build_scaled` synthesizes an id-shifted ~Nx copy of the sf0.1
+testdata (id-shifted unions, so key structure and per-user/per-doc
+locality are preserved while user, document and order cardinalities
+genuinely grow); `tools/query_profile.py --sf1` and bench.py time
+queries on it. `build_mutated` builds a mutation-based corpus for the
+dedup family. Each mode below prints one JSON line; with no mode flag
+the script prints this usage and exits.
 
-Usage: python tools/scale_stress.py [--mult N] [name ...]
-Writes nothing outside /tmp; prints one JSON line per query with
-(base_sec, scaled_sec, ratio, rows_base, rows_scaled).
+Usage: python tools/scale_stress.py MODE [--mult N] [--mults A,B,C]
+           [--batches B] [--mutate-rate R] [name ...]
 
---dedup-stress (VERDICT r13 #4) swaps the id-shifted copies for a
+--dedup-stress [name ...] swaps the id-shifted copies for a
 MUTATION-BASED corpus (build_mutated) and runs the dedup family —
 verbatim copies make near-dup pair output quadratic in the
 multiplier by construction, so the id-shift recipe can't
 scale-stress exactly the queries whose 100 TB story matters most.
 
---store-stress [--mults 1,10,100] (r15) runs the persisted-LSH-store
+--store-stress [--mults 1,10,100] runs the persisted-LSH-store
 lifecycle on the mutated corpus: per mult, build the store once
 (timed, ~linear allowed), then probe and append a FIXED batch — the
 claim bounded is per-batch cost independent of store size.
 
---ivf-stress [--mults 1,10,100] (r15) is the IVF twin: signed-
+--ivf-stress [--mults 1,10,100] is the IVF twin: signed-
 permutation-scaled embeddings, build the cell-bucketed store once,
 then a fixed top-k probe batch + a fixed append batch per scale.
 
---churn-stress [--mult N] [--batches B] (r15) measures append-churn
+--churn-stress [--mult N] [--batches B] measures append-churn
 degradation and compaction recovery: probe floor fresh, after B
 drip appends (file count grows num_buckets per append), and after
 compact_bucketed_table restores one file per bucket.
+
+--append-stress and --reseed-stress [--mult N] phase-split the store
+append paths and the IVF reseed on the id-shifted Nx copy.
+
+Writes nothing outside /tmp.
 """
 
 from __future__ import annotations
@@ -64,20 +69,6 @@ SHIFTS = {
     "lineitem": [("l_orderkey", 10**9)],
 }
 COPY_AS_IS = ("region", "nation", "supplier", "part")
-
-DEFAULT_QUERIES = [
-    "pricing_summary",          # scan+agg
-    "nation_revenue_by_year",   # broadcast snowflake join
-    "allocate_order_total",     # window allocation
-    "event_anomaly_flags",      # shared-partition windows
-    "event_sessions_cc",        # iterative CC
-    "minhash_near_dup_pairs",   # LSH dedup
-    "doc_bloom_incremental_dedup",
-    "doc_bm25_relevance",
-    "purchase_asof_signup",     # as-of join
-    "jw_linkage_parts",         # similarity linkage
-]
-
 
 def build_scaled(spark, mult: int, base: str = BASE) -> None:
     from pyspark.sql import functions as F
@@ -789,33 +780,22 @@ def stress_append_paths(spark, mult: int) -> dict:
     return out
 
 
+MODES = ("--dedup-stress", "--store-stress", "--ivf-stress",
+         "--churn-stress", "--append-stress", "--reseed-stress")
+
+
 def main() -> int:
     mult = 10
     args = sys.argv[1:]
-    append_stress = False
-    # Order-independent flag parsing (r11 self-review: a trailing
-    # --append-stress used to fall through into the query names).
-    reseed_stress = False
-    dedup_stress = False
-    store_stress = False
-    ivf_stress = False
-    churn_stress = False
+    mode = None
     churn_batches = 30
     mults = (1, 10, 100)
     mutate_rate = 60
+    # Order-independent flag parsing: a trailing mode flag must not
+    # fall through into the query names.
     while args and args[0].startswith("--"):
-        if args[0] == "--append-stress":
-            append_stress = True; args = args[1:]
-        elif args[0] == "--reseed-stress":
-            reseed_stress = True; args = args[1:]
-        elif args[0] == "--dedup-stress":
-            dedup_stress = True; args = args[1:]
-        elif args[0] == "--store-stress":
-            store_stress = True; args = args[1:]
-        elif args[0] == "--ivf-stress":
-            ivf_stress = True; args = args[1:]
-        elif args[0] == "--churn-stress":
-            churn_stress = True; args = args[1:]
+        if args[0] in MODES:
+            mode = args[0]; args = args[1:]
         elif args[0] == "--batches":
             churn_batches = int(args[1]); args = args[2:]
         elif args[0] == "--mults":
@@ -827,85 +807,52 @@ def main() -> int:
             mult = int(args[1]); args = args[2:]
         else:
             raise SystemExit(f"unknown flag {args[0]}")
-    names = args or DEFAULT_QUERIES
+    if mode is None:
+        raise SystemExit(__doc__)
 
-    from pudl_spark.plans.queries import QUERIES
     from pudl_spark.session import get_spark
 
     spark = get_spark("scale_stress")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    if store_stress:
-        res = stress_store_lifecycle(spark, mults, rate=mutate_rate)
-        print(json.dumps({"mults": list(mults),
-                          "mutate_rate": mutate_rate,
-                          "store_stress": res}))
+    try:
+        if mode == "--store-stress":
+            out = {"mults": list(mults), "mutate_rate": mutate_rate,
+                   "store_stress": stress_store_lifecycle(
+                       spark, mults, rate=mutate_rate)}
+        elif mode == "--churn-stress":
+            out = {"churn_stress": stress_store_churn(
+                spark, mult, churn_batches)}
+        elif mode == "--ivf-stress":
+            out = {"mults": list(mults),
+                   "ivf_stress": stress_ivf_lifecycle(spark, mults)}
+        elif mode == "--dedup-stress":
+            print(f"building mutated {mult}x corpus (rate "
+                  f"{mutate_rate}) under {MUT_SCALED} ...",
+                  file=sys.stderr)
+            t0 = time.perf_counter()
+            build_mutated(spark, mult, rate=mutate_rate)
+            print(f"built in {time.perf_counter()-t0:.1f}s",
+                  file=sys.stderr)
+            out = {"mult": mult, "mutate_rate": mutate_rate,
+                   "dedup_stress": stress_dedup(spark, mult,
+                                                args or None)}
+        else:
+            print(f"building {mult}x testdata under {SCALED} ...",
+                  file=sys.stderr)
+            t0 = time.perf_counter()
+            build_scaled(spark, mult)
+            print(f"built in {time.perf_counter()-t0:.1f}s",
+                  file=sys.stderr)
+            if mode == "--append-stress":
+                out = {"mult": mult,
+                       "append_stress": stress_append_paths(spark, mult)}
+            else:
+                out = {"mult": mult,
+                       "reseed_stress": stress_reseed(spark, mult)}
+        print(json.dumps(out))
+    finally:
         spark.stop()
-        return 0
-
-    if churn_stress:
-        res = stress_store_churn(spark, mult, churn_batches)
-        print(json.dumps({"churn_stress": res}))
-        spark.stop()
-        return 0
-
-    if ivf_stress:
-        res = stress_ivf_lifecycle(spark, mults)
-        print(json.dumps({"mults": list(mults),
-                          "ivf_stress": res}))
-        spark.stop()
-        return 0
-
-    if dedup_stress:
-        print(f"building mutated {mult}x corpus (rate {mutate_rate}) "
-              f"under {MUT_SCALED} ...", file=sys.stderr)
-        t0 = time.perf_counter()
-        build_mutated(spark, mult, rate=mutate_rate)
-        print(f"built in {time.perf_counter()-t0:.1f}s",
-              file=sys.stderr)
-        res = stress_dedup(spark, mult, args or None)
-        print(json.dumps({"mult": mult, "mutate_rate": mutate_rate,
-                          "dedup_stress": res}))
-        spark.stop()
-        return 0
-
-    print(f"building {mult}x testdata under {SCALED} ...", file=sys.stderr)
-    t0 = time.perf_counter()
-    build_scaled(spark, mult)
-    print(f"built in {time.perf_counter()-t0:.1f}s", file=sys.stderr)
-
-    if append_stress:
-        res = stress_append_paths(spark, mult)
-        print(json.dumps({"mult": mult, "append_stress": res}))
-        spark.stop()
-        return 0
-
-    if reseed_stress:
-        res = stress_reseed(spark, mult)
-        print(json.dumps({"mult": mult, "reseed_stress": res}))
-        spark.stop()
-        return 0
-
-    results = {}
-    for name in names:
-        fn = QUERIES[name]
-        row = {}
-        for label, sf_dir in (("base", BASE), ("scaled", SCALED)):
-            spark.catalog.clearCache()
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop") \
-                    .mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            row[label] = round(min(runs), 3)
-        row["ratio"] = round(row["scaled"] / row["base"], 2)
-        row["per_mult"] = round(row["ratio"] / mult, 2)
-        results[name] = row
-        print(json.dumps({"query": name, **row}))
-    print(json.dumps({"mult": mult, "results": results}))
-    spark.stop()
     return 0
 
 
