@@ -77,6 +77,7 @@ def train_bpe(docs: DataFrame, text_col: str,
             F.concat(F.split(F.col("word"), ""),
                      F.array(F.lit(EOW))))
         .select("word", "n", "syms")
+        # Lineage pin: the vocabulary the merge loop starts from.
         .localCheckpoint()
     )
 
@@ -114,6 +115,7 @@ def train_bpe(docs: DataFrame, text_col: str,
                     lambda s: _merge_symbols(list(s), _l, _r))
                 yield pdf
 
+        # Lineage pin: one cut per merge keeps the plan depth constant.
         words = words.mapInPandas(
             apply_merge, schema="word string, n long, syms array<string>"
         ).localCheckpoint()

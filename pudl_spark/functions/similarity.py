@@ -469,8 +469,8 @@ def ivf_store_topk(spark, table_name: str, queries: DataFrame,
             cells = sorted({r["cell"] for r in qrows})
             s = s.filter(in_list("cell", cells))
         else:
-            # Caller understated batch_rows: stay distributed, with
-            # the lineage cut so the probe pipeline runs once.
+            # Reuse pin (no query reaches it): caller understated
+            # batch_rows, so stay distributed and run the probe once.
             qseeds = qseeds.localCheckpoint()
     cand = qseeds.join(s, "cell").select(
         "query_id", F.col("vec_id").alias("neighbor_id"),
@@ -939,6 +939,8 @@ def append_to_ivf_store_idempotent(spark, table_name: str,
         {"nprobe": nprobe, "centroid_factor": centroid_factor,
          "num_buckets": num_buckets},
         "append_to_ivf_store_idempotent")
+    # Reuse pin: the guard's cell collect and the append read the rows
+    # (ivf_store_redelivery 3.38 s unpinned vs 2.72 s at sf0.1).
     rows = _assign_to_store_cells(spark, table_name, new_vecs, nprobe,
                                   centroid_factor).localCheckpoint()
     _append_store_rows(

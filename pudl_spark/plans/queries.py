@@ -6501,19 +6501,8 @@ def doc_bigram_perplexity(spark, sf_dir):
     from pudl_spark.functions.text import tokens as _tok
 
     t = F.transform(_tok("text"), lambda w: F.lower(w))
-    # Single text pass (r15, guide §2.1/§6.1): un-pinned, Catalyst
-    # replayed the regex tokenize for every consumer (c12 subtree,
-    # the c1 re-aggregation, the scoring probe side, vocab — 4
-    # documents scans). Pin the token ARRAYS only (tokenize once;
-    # measured the paying pin at 10x data: 1.44 s vs 1.71 s unpinned
-    # same-session). The exploded bigram stream is NOT pinned (r16,
-    # VERDICT r15 #3): it was the query's largest pinned frame —
-    # O(corpus tokens) of (doc_id, w1, w2) string rows in executor
-    # block storage with no fault tolerance — and interleaved A/B at
-    # both scales reads the re-explode-from-pinned-arrays form equal
-    # or faster (sf0.1 1.79 vs 1.93 s; sf1 1.44 vs 1.43 s): the
-    # explode is cheap map-side work over the already-pinned arrays,
-    # so materializing its output bought nothing.
+    # Reuse pin: every model branch reads the token arrays (0.81 s
+    # unpinned vs 0.58 s pinned at sf0.1, 4 cores; history in git).
     docs = d.select("doc_id", t.alias("t")).localCheckpoint(eager=False)
     idx = F.sequence(F.lit(1), F.greatest(F.size("t") - 1, F.lit(0)))
     big = (
@@ -6526,9 +6515,8 @@ def doc_bigram_perplexity(spark, sf_dir):
             ))).alias("bg"))
         .select("doc_id", "bg.w1", "bg.w2")
     )
-    # Pin the bigram model too: un-pinned, the c12 aggregation replays
-    # under BOTH the c1 derivation and the scoring join's broadcast
-    # (two full aggregations of the corpus bigrams). Vocabulary-sized.
+    # Reuse pin: c1 and the scoring join both read c12 (0.76 s
+    # unpinned vs 0.58 s pinned at sf0.1, 4 cores).
     c12 = (big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
            .localCheckpoint(eager=False))
     # c(w1) = count of bigram STARTS = sum over w2 of c(w1,w2): derive
@@ -9756,6 +9744,8 @@ def table_quality_screens(spark, sf_dir):
     # 5. missingness — value nulled at event_id % 13 == 0 (~7.7%)
     #    vs an upper bound of 5%: FAILS; the metric is an exact
     #    integer ratio, bit-identical cross-engine.
+    # Reuse pin: the check and the metric both read it (4.44 s
+    # unpinned vs 3.67 s pinned at sf0.1, 4 cores).
     ev = events.select(
         F.when(F.col("event_id") % 13 != 0,
                F.col("value")).alias("value")).localCheckpoint(

@@ -397,6 +397,8 @@ def lsh_ingest_stream(stream_docs: DataFrame, table_prefix: str,
 
     def _probe_then_ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # Reuse pin (not A/B'd): the count, the bootstrap build, the
+        # id collect and fresh all read the micro-batch.
         batch = batch_df.localCheckpoint()
         if batch.count() == 0:
             return
@@ -442,6 +444,9 @@ def lsh_ingest_stream(stream_docs: DataFrame, table_prefix: str,
         store_sets = spark.table(f"{table_prefix}_sets").select("id")
         if len(ids) <= max_prune_values:
             store_sets = store_sets.filter(in_list("id", sorted(ids)))
+        # Reuse pin (not A/B'd): the count, the probe and the append
+        # read fresh; the append's sets rows materialize before it
+        # writes _sets, so fresh is never re-read after a write.
         fresh = batch.join(
             store_sets.select(F.col("id").alias(id_col)).distinct(),
             id_col, "left_anti").localCheckpoint()
@@ -547,6 +552,8 @@ def ivf_ingest_stream(stream_vecs: DataFrame, table_name: str,
 
     def _probe_then_ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # Reuse pin (not A/B'd): the count, the bootstrap build and the
+        # cell assignment read the micro-batch.
         batch = (batch_df.select(F.col(id_col).alias("vec_id"),
                                  F.col(vec_col).alias("embedding"))
                  .localCheckpoint())
@@ -586,7 +593,10 @@ def ivf_ingest_stream(stream_vecs: DataFrame, table_name: str,
         # Fully-redelivered batch: every vec_id already in the store
         # (checked cell-pruned, O(batch cells' members)) -> skip.
         # `antijoin_store_ids` is the SAME guard block the idempotent
-        # append uses.
+        # append uses. Reuse pin on rows: the guard's cell collect and
+        # the anti-join read them (ivf_stream_matches 9.87 s unpinned
+        # vs 8.06 s at sf0.1). Reuse pin on fresh (not A/B'd): the
+        # count, the probe and the append read it.
         rows = _assign_to_store_cells(spark, table_name, batch,
                                       nprobe, centroid_factor
                                       ).localCheckpoint()
